@@ -1,4 +1,4 @@
-"""Canonical value normalization and row checksums, as Spark Column expressions.
+"""Canonical value normalization and row checksums, rendered as Spark SQL text.
 
 This is the Spark re-expression of the reference's NormalizeAsString /
 Checksum layer (/root/reference/data_diff/databases/base.py:808-896 and
@@ -12,13 +12,33 @@ checksums bit-identical with every reference dialect (DuckDB, Postgres, ...)
 — verified by the golden test against tests/common.py:117-127
 (str_to_checksum) and by the DuckDB oracle queries.
 
-Everything here is a plain Column expression: JVM-side, whole-stage
-codegen'd, no Python in the hot path.
+SQL text is the single recipe. ``normalize_sql`` is the one type dispatch;
+``fingerprint_sql`` and ``md5_as_int_sql`` assemble checksums from it, and
+``normalized_sql`` renders a schema's columns with backtick-quoted
+identifiers. Operators put these strings into one ``selectExpr``/``F.expr``
+per projection. The Column-returning helpers (``normalize_as_string``,
+``row_checksum``, ...) are one-line ``F.expr`` wrappers over the same
+renderers, so no recipe exists twice. Every operand is a SQL expression; a
+plain column name is one, other names need ``quote_ident``.
+
+Why text and not Column calls: each ``pyspark.sql.functions`` call is a py4j
+round trip, and PySpark 4's call-site capture adds five or more per call.
+Building join_diff's plan for a 9-column type-skewed pair node by node sent
+2,215 py4j commands and took 0.3-0.4 s before Spark ran anything; the same
+plan parsed from one SQL string per projection sends about 60.
+Catalyst parses the text into the same expression trees, so the optimized
+plans (and every checksum) are unchanged.
+
+Only identifiers, type parameters and fixed constants are ever put into the
+SQL text — never data values.
+
+Everything here evaluates JVM-side, whole-stage codegen'd, with no Python
+in the hot path.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Optional, Sequence, Union
+from typing import Iterable, List, Mapping, Optional, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -33,192 +53,201 @@ from data_diff_spark.constants import (
     NULL_LITERAL,
 )
 
-ColumnOrName = Union[Column, str]
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
-def _to_col(c: ColumnOrName) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for Spark SQL (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def normalize_timestamp(col: ColumnOrName, precision: int = DEFAULT_DATETIME_PRECISION) -> Column:
-    """Render a timestamp as 'YYYY-MM-DD HH:MM:SS.FFFFFF' (microsecond-padded).
-
-    Digits beyond ``precision`` are truncated, then the string is padded back
-    to 6 fractional digits with zeros — exactly the reference's canonical
-    form (databricks.py:93-107, non-rounding path).
-    """
-    col = _to_col(col)
-    if not 0 <= precision <= 6:
-        raise ValueError(f"timestamp precision must be in [0, 6], got {precision}")
-    fmt = "yyyy-MM-dd HH:mm:ss." + "S" * precision + "0" * (6 - precision)
-    return F.date_format(col, fmt)
+def _str_lit(s: str) -> str:
+    """A fixed constant as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def normalize_date(col: ColumnOrName) -> Column:
-    return F.date_format(_to_col(col), "yyyy-MM-dd")
+def _fraction_pattern(precision: int, what: str) -> str:
+    """'S' per kept fractional digit, '0' padding to six: truncate-then-pad."""
+    p = int(precision)
+    if not 0 <= p <= 6:
+        raise ValueError(f"{what} precision must be in [0, 6], got {precision}")
+    return "S" * p + "0" * (6 - p)
 
 
-def normalize_time(
-    col: ColumnOrName,
-    precision: int = DEFAULT_DATETIME_PRECISION,
-    data_type: Optional[T.DataType] = None,
-) -> Column:
-    """Render a time-of-day as 'HH:MM:SS.FFFFFF' — the reference's `Time`
-    column type (database_types.py:157-161), which Spark has no native
-    type for. Two physical encodings are supported:
-
-      - TimestampType at the epoch day: what spark.read.jdbc yields for a
-        SQL TIME column (value = 1970-01-01 + time). date_format with a
-        time-only pattern drops the date part, so a JDBC TIME side
-        normalizes identically to a remote dialect rendering time-only.
-      - DayTimeIntervalType (pass it as `data_type`): converted through
-        its exact microsecond count.
-
-    Truncate-then-pad semantics match normalize_timestamp. The generic
-    normalize_as_string dispatch cannot infer "TIME" from a Spark schema
-    (both encodings are also legitimate non-TIME types), so callers apply
-    this per column — the same place the reference gets it from the
-    remote schema (information_schema data_type)."""
-    col = _to_col(col)
-    if not 0 <= precision <= 6:
-        raise ValueError(f"time precision must be in [0, 6], got {precision}")
-    fmt = "HH:mm:ss." + "S" * precision + "0" * (6 - precision)
-    if isinstance(data_type, T.DayTimeIntervalType):
-        # exact: decimal(20,6) carries the full µs resolution of the interval
-        us = (col.cast(T.DecimalType(20, 6)) * 1_000_000).cast("long")
-        col = F.timestamp_micros(us)
-    return F.date_format(col, fmt)
-
-
-def normalize_number(col: ColumnOrName, precision: int = DEFAULT_NUMERIC_PRECISION) -> Column:
-    """Render a number as a fixed-point string with ``precision`` fractional digits.
-
-    cast → decimal(38, p) (HALF_UP, matching DuckDB/Postgres renderings), then
-    format and strip grouping commas (databricks.py:109-113).
-
-    try_cast, not cast: a double past the decimal(38,p) envelope
-    (|x| >= 1e32 at p=6) must fingerprint as '<null>' deterministically —
-    under Spark 4's ANSI default a plain cast would instead abort the
-    whole diff job with NUMERIC_VALUE_OUT_OF_RANGE, and under non-ANSI it
-    NULLs anyway; try_cast gives the NULL behavior regardless of the
-    session's ansi flag. The SQLite dnorm mirror clamps identically
-    (operators/remote.py).
-    """
-    col = _to_col(col)
-    value = col.try_cast(T.DecimalType(38, precision))
-    if precision > 0:
-        return F.replace(F.format_number(value, precision), F.lit(","), F.lit(""))
-    return value.cast("string")
-
-
-def normalize_boolean(col: ColumnOrName) -> Column:
-    """'0' / '1' (databricks.py:115-116)."""
-    return _to_col(col).cast("int").cast("string")
-
-
-def normalize_uuid(col: ColumnOrName) -> Column:
-    """Trim whitespace; keep casing (reference base.py:848-852)."""
-    return F.trim(_to_col(col))
-
-
-def normalize_json(col: ColumnOrName) -> Column:
-    """Canonicalize a JSON document held in a string column.
-
-    The reference compares JSON minified (base.py:858-860) with a Python-side
-    equivalence fallback (utils.py:522-536). In Spark we canonicalize
-    structurally: parse to VariantType and re-serialize, which minifies and
-    normalizes number forms without leaving the JVM.
-    """
-    col = _to_col(col)
-    return F.to_json(F.try_parse_json(col))
-
-
-def normalize_as_string(
-    col: ColumnOrName,
+def normalize_sql(
+    operand: str,
     data_type: T.DataType,
     precision: Optional[int] = None,
-) -> Column:
-    """Dispatch on the Spark type — the NormalizeAsString equivalent
-    (reference base.py:866-896)."""
-    col = _to_col(col)
+    kind: Optional[str] = None,
+) -> str:
+    """SQL text rendering ``operand`` to its canonical comparison string —
+    the NormalizeAsString dispatch (reference base.py:866-896).
+
+    kind selects a semantic normalization the Spark type cannot express:
+      'uuid'  trim whitespace, keep casing (reference base.py:848-852);
+      'json'  parse to VariantType and re-serialize: minified, number forms
+              normalized, without leaving the JVM (reference base.py:858-860
+              compares minified JSON with a Python-side fallback);
+      'time'  a time of day as 'HH:MM:SS.FFFFFF' — the reference's `Time`
+              type (database_types.py:157-161), which Spark lacks. The
+              operand is either a TimestampType at the epoch day (what
+              spark.read.jdbc yields for SQL TIME; the time-only pattern
+              drops the date) or a DayTimeIntervalType (converted through
+              its exact microsecond count). A schema cannot tell TIME from
+              these types' ordinary uses, so callers opt in per column —
+              where the reference reads it from the remote schema.
+    Any other kind (e.g. refine.py's 'alphanum', detection parity only)
+    falls through to the type dispatch.
+
+    Numbers cast to decimal(38, p) (HALF_UP, matching DuckDB/Postgres) and
+    render as plain fixed-point text — for p <= 6 by the remote dialects'
+    norm_sql recipe (a cast to string), for larger p by format_number with
+    the grouping commas removed, since the cast is plain only under ANSI
+    mode at those scales. try_cast, not cast: a double past the envelope
+    (|x| >= 1e32 at p=6) must fingerprint as '<null>' deterministically;
+    under Spark 4's ANSI default a plain cast would abort the whole diff
+    with NUMERIC_VALUE_OUT_OF_RANGE, and under non-ANSI it is NULL anyway.
+    The SQLite dnorm mirror clamps identically (operators/remote.py).
+    """
+    x = operand
+    if kind == "uuid":
+        return f"trim({x})"
+    if kind == "json":
+        return f"to_json(try_parse_json({x}))"
+    if kind == "time":
+        p = DEFAULT_DATETIME_PRECISION if precision is None else precision
+        fmt = "HH:mm:ss." + _fraction_pattern(p, "time")
+        if isinstance(data_type, T.DayTimeIntervalType):
+            # exact: decimal(20,6) carries the full µs resolution of the interval
+            x = f"timestamp_micros(cast(cast({x} as decimal(20,6)) * 1000000 as bigint))"
+        return f"date_format({x}, '{fmt}')"
     if isinstance(data_type, (T.TimestampType, T.TimestampNTZType)):
-        return normalize_timestamp(col, DEFAULT_DATETIME_PRECISION if precision is None else precision)
+        p = DEFAULT_DATETIME_PRECISION if precision is None else precision
+        fmt = "yyyy-MM-dd HH:mm:ss." + _fraction_pattern(p, "timestamp")
+        return f"date_format({x}, '{fmt}')"
     if isinstance(data_type, T.DateType):
-        return normalize_date(col)
-    if isinstance(data_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return col.cast("string")
-    if isinstance(data_type, T.DecimalType):
-        return normalize_number(col, data_type.scale if precision is None else precision)
-    if isinstance(data_type, (T.FloatType, T.DoubleType)):
-        return normalize_number(col, DEFAULT_NUMERIC_PRECISION if precision is None else precision)
+        return f"date_format({x}, 'yyyy-MM-dd')"
+    if isinstance(data_type, _INTEGRAL):
+        return f"cast({x} as string)"
+    if isinstance(data_type, (T.DecimalType, T.FloatType, T.DoubleType)):
+        if precision is None:
+            precision = (data_type.scale if isinstance(data_type, T.DecimalType)
+                         else DEFAULT_NUMERIC_PRECISION)
+        p = int(precision)
+        d = f"try_cast({x} as decimal(38,{p}))"
+        if p <= 6:
+            return f"cast({d} as string)"
+        # Decimal-to-string casts print plain text only under ANSI; without
+        # it Spark uses BigDecimal.toString, which turns scientific once the
+        # adjusted exponent drops below -6 (0 at scale 8 prints '0E-8').
+        # Scale <= 6 can never reach that; larger scales use format_number.
+        return f"replace(format_number({d}, {p}), ',', '')"
     if isinstance(data_type, T.BooleanType):
-        return normalize_boolean(col)
+        return f"cast(cast({x} as int) as string)"  # '0' / '1' (databricks.py:115-116)
     if isinstance(data_type, T.StringType):
-        return col
+        return x
     if isinstance(data_type, T.BinaryType):
-        return F.lower(F.hex(col))
+        return f"lower(hex({x}))"
     if isinstance(data_type, (T.ArrayType, T.MapType, T.StructType)):
         # Arrays/structs are compared as their JSON string (reference
         # base.py:858-864, bigquery.py:209-214).
-        return F.to_json(col)
+        return f"to_json({x})"
     # UnknownColType fallback (reference database_types.py:303-308).
-    return col.cast("string")
+    return f"cast({x} as string)"
 
 
-def normalized_columns(
+def normalized_sql(
     schema: T.StructType,
     columns: Sequence[str],
     precision_overrides: Optional[Mapping[str, int]] = None,
     kind_overrides: Optional[Mapping[str, str]] = None,
-) -> list[Column]:
-    """Normalize each named column per its schema type; keeps original names.
-
-    kind_overrides marks string columns with refined semantic kinds
-    (refine.py / the reference's _refine_coltypes): 'uuid' → trim,
-    'json' → structural canonicalization, 'alphanum' → comparison-neutral
-    (detection parity only; the reference uses it for key-space
-    arithmetic Spark doesn't need).
-    """
+    aliased: bool = False,
+) -> List[str]:
+    """normalize_sql of each named column per its schema type (identifiers
+    quoted), with the unified precisions (unify.py) and the refined string
+    kinds (refine.py / the reference's _refine_coltypes) applied.
+    aliased=True names each result after its column (a selectExpr list)."""
     by_name = {f.name: f for f in schema.fields}
     overrides = precision_overrides or {}
     kinds = kind_overrides or {}
     out = []
-    for name in columns:
-        f = by_name[name]
-        kind = kinds.get(name)
-        if kind == "uuid":
-            expr = normalize_uuid(F.col(name))
-        elif kind == "json":
-            expr = normalize_json(F.col(name))
-        else:
-            expr = normalize_as_string(F.col(name), f.dataType, overrides.get(name))
-        out.append(expr.alias(name))
+    for c in columns:
+        q = quote_ident(c)
+        s = normalize_sql(q, by_name[c].dataType, overrides.get(c), kinds.get(c))
+        out.append(f"{s} AS {q}" if aliased else s)
     return out
 
 
-def row_fingerprint(normalized: Iterable[Column]) -> Column:
+def null_safe_sql(expr: str) -> str:
+    """coalesce(expr, '<null>'): NULL renders as a literal distinct from ''."""
+    return f"coalesce({expr}, {_str_lit(NULL_LITERAL)})"
+
+
+def fingerprint_sql(normalized: Sequence[str]) -> str:
     """Concatenate normalized column strings: coalesce(x, '<null>') joined by '|'.
 
     Exact concat semantics of the reference's Checksum node
     (base.py:411-421, 423-443): NULL → '<null>', separator '|'.
     """
-    parts = [F.coalesce(c, F.lit(NULL_LITERAL)) for c in normalized]
+    parts = [null_safe_sql(s) for s in normalized]
     if not parts:
         raise ValueError("row_fingerprint needs at least one column")
     if len(parts) == 1:
         return parts[0]
-    return F.concat_ws(FINGERPRINT_SEP, *parts)
+    return f"concat_ws({_str_lit(FINGERPRINT_SEP)}, {', '.join(parts)})"
 
 
-def md5_as_int(col: ColumnOrName) -> Column:
+def md5_as_int_sql(s: str, sql_type: str = "decimal(38,0)") -> str:
     """Low 12 hex digits of md5, as an integer centered at 0.
 
     Reference Spark-SQL recipe databricks.py:87-88:
         cast(conv(substr(md5(s), 21), 16, 10) as decimal(38, 0)) - OFFSET
+    sql_type='bigint' gives the same value as a long (48-bit terms), for
+    callers that sum in 64 bits like the remote dialects do.
     """
-    col = _to_col(col)
-    raw = F.conv(F.substring(F.md5(col), CHECKSUM_SUBSTR_POS, 1000), 16, 10)
-    return raw.cast(T.DecimalType(38, 0)) - F.lit(CHECKSUM_OFFSET).cast(T.DecimalType(38, 0))
+    raw = f"conv(substring(md5({s}), {CHECKSUM_SUBSTR_POS}, 1000), 16, 10)"
+    return f"(cast({raw} as {sql_type}) - cast({CHECKSUM_OFFSET} as {sql_type}))"
+
+
+def row_checksum_sql(
+    schema: T.StructType,
+    columns: Sequence[str],
+    precision_overrides: Optional[Mapping[str, int]] = None,
+    kind_overrides: Optional[Mapping[str, str]] = None,
+) -> str:
+    """md5_as_int(fingerprint(normalized columns)) as SQL text."""
+    normd = normalized_sql(schema, columns, precision_overrides, kind_overrides)
+    return md5_as_int_sql(fingerprint_sql(normd))
+
+
+# ---- Column wrappers: one F.expr each over the renderers above ------------
+
+
+def normalize_time(
+    col: str,
+    precision: int = DEFAULT_DATETIME_PRECISION,
+    data_type: Optional[T.DataType] = None,
+) -> Column:
+    """'HH:MM:SS.FFFFFF' of a TIME column (see normalize_sql kind='time');
+    pass data_type=DayTimeIntervalType() for the interval encoding."""
+    return F.expr(normalize_sql(col, data_type or T.TimestampType(), precision, "time"))
+
+
+def normalize_number(col: str, precision: int = DEFAULT_NUMERIC_PRECISION) -> Column:
+    """Fixed-point string with ``precision`` fractional digits."""
+    return F.expr(normalize_sql(col, T.DoubleType(), precision))
+
+
+def normalize_as_string(col: str, data_type: T.DataType, precision: Optional[int] = None) -> Column:
+    return F.expr(normalize_sql(col, data_type, precision))
+
+
+def row_fingerprint(normalized: Iterable[str]) -> Column:
+    return F.expr(fingerprint_sql(list(normalized)))
+
+
+def md5_as_int(col: str) -> Column:
+    return F.expr(md5_as_int_sql(col))
 
 
 def row_checksum(
@@ -227,16 +256,8 @@ def row_checksum(
     precision_overrides: Optional[Mapping[str, int]] = None,
     kind_overrides: Optional[Mapping[str, str]] = None,
 ) -> Column:
-    """Per-row checksum column: md5_as_int(fingerprint(normalized columns)).
-
-    sum() of this column over any row set is the reference's segment checksum
-    (table_segment.py:239-258); equal row multisets ⇒ equal sums.
-    """
-    normd = normalized_columns(schema, columns, precision_overrides, kind_overrides)
-    return md5_as_int(row_fingerprint(normd))
-
-
-def checksum_agg(checksum_col: Column) -> Column:
-    """sum() aggregate over row checksums; decimal(38,0) never overflows for
-    any realistic row count (48-bit terms leave ~10^23 headroom)."""
-    return F.sum(checksum_col)
+    """Per-row checksum column: sum() of it over any row set is the
+    reference's segment checksum (table_segment.py:239-258); equal row
+    multisets ⇒ equal sums. decimal(38,0) never overflows for any realistic
+    row count (48-bit terms leave ~10^23 headroom)."""
+    return F.expr(row_checksum_sql(schema, columns, precision_overrides, kind_overrides))

@@ -28,15 +28,17 @@ PostgreSQL/DuckDB/Snowflake via the reference's segment SQL
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, NamedTuple, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_diff_spark.normalize import (
-    md5_as_int,
-    normalized_columns,
-    row_fingerprint,
+    fingerprint_sql,
+    md5_as_int_sql,
+    normalized_sql,
+    null_safe_sql,
+    quote_ident as q,
 )
 from data_diff_spark.operators.joindiff import SIGN_COL, _check_consistent
 from data_diff_spark.table import TableSegment
@@ -58,43 +60,53 @@ def _knorm(i: int) -> str:
     return f"__knorm{i}__"
 
 
-def _annotated_narrow(t: TableSegment, cols: List[str]) -> DataFrame:
+class _SideSQL(NamedTuple):
+    """One side's recipe, rendered once per diff: its columns renamed to the
+    shared output names, the row checksum and the NULL-safe normalized key
+    strings (SQL text, see normalize.py)."""
+
+    renamed: List[str]
+    cks: str
+    knorm: List[str]
+
+    def knorm_exprs(self) -> List[str]:
+        return [f"{k} AS {_knorm(i)}" for i, k in enumerate(self.knorm)]
+
+    def keyhash_expr(self) -> str:
+        return f"xxhash64({', '.join(self.knorm)}) AS {_H}"
+
+
+def _side_sql(t: TableSegment, cols: List[str], out_names: List[str]) -> _SideSQL:
+    normd = normalized_sql(t.schema, cols, t.precision_overrides, t.kind_overrides)
+    return _SideSQL(
+        [f"{q(c)} AS {q(o)}" for c, o in zip(cols, out_names)],
+        md5_as_int_sql(fingerprint_sql(normd)),
+        [null_safe_sql(s) for s in normd[:len(t.key_columns)]],
+    )
+
+
+def _annotated_narrow(t: TableSegment, side: _SideSQL) -> DataFrame:
     """Normalized key strings + per-row checksum + key hash ONLY — no raw
     columns. The persist="narrow" cache: a handful of strings and two
     numbers per row no matter how wide the table, at the cost of a final
     semi-join re-read of the emitted keys (see hash_diff)."""
-    nkeys = len(t.key_columns)
-    df = t.make_select()
-    normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    cks = md5_as_int(row_fingerprint(normd))
-    key_norm = [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    ]
-    knorm_cols = [k.alias(_knorm(i)) for i, k in enumerate(key_norm)]
-    return df.select(cks.alias(_CKS), *knorm_cols, F.xxhash64(*key_norm).alias(_H))
+    return t.make_select().selectExpr(
+        f"{side.cks} AS {_CKS}", *side.knorm_exprs(), side.keyhash_expr()
+    )
 
 
 def _narrow_emit(
-    t: TableSegment, cols: List[str], out_names: List[str], sign: str, bad_keys: DataFrame
+    t: TableSegment, out_names: List[str], sign: str, bad_keys: DataFrame, side: _SideSQL,
 ) -> DataFrame:
     """Re-read a side restricted (left-semi on normalized keys) to the PKs
     the narrow phase decided differ; all rows of a differing PK come back,
     preserving the duplicate-PK multiset emission of the wide path."""
-    nkeys = len(t.key_columns)
-    df = t.make_select()
-    key_norm = [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    ]
-    renamed = [F.col(c).alias(o) for c, o in zip(cols, out_names)]
-    knorm_cols = [k.alias(_knorm(i)) for i, k in enumerate(key_norm)]
-    annotated = df.select(*renamed, *knorm_cols)
-    joined = annotated.join(bad_keys, [_knorm(i) for i in range(nkeys)], "left_semi")
-    return joined.select(F.lit(sign).alias(SIGN_COL), *out_names)
+    annotated = t.make_select().selectExpr(*side.renamed, *side.knorm_exprs())
+    joined = annotated.join(bad_keys, [_knorm(i) for i in range(len(side.knorm))], "left_semi")
+    return joined.selectExpr(f"'{sign}' AS {SIGN_COL}", *map(q, out_names))
 
 
-def _annotated(t: TableSegment, cols: List[str], out_names: List[str]) -> DataFrame:
+def _annotated(t: TableSegment, side: _SideSQL) -> DataFrame:
     """Rows + per-row checksum + normalized key strings + key hash, columns
     renamed to the shared output names. The hash covers the *normalized key
     strings* so both sides align even when key columns differ in name or
@@ -106,24 +118,20 @@ def _annotated(t: TableSegment, cols: List[str], out_names: List[str]) -> DataFr
     kind overrides (uuid trim) or cross-side key type differences.
     Bucket ids at any granularity derive from the stored hash (pmod), so
     the digest levels are chosen AFTER annotation."""
-    nkeys = len(t.key_columns)
-    df = t.make_select()
-    normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    cks = md5_as_int(row_fingerprint(normd))
-    key_norm = [
-        F.coalesce(c, F.lit("<null>")) for c in
-        normalized_columns(t.schema, cols[:nkeys], t.precision_overrides, t.kind_overrides)
-    ]
-    renamed = [F.col(c).alias(o) for c, o in zip(cols, out_names)]
-    knorm_cols = [k.alias(_knorm(i)) for i, k in enumerate(key_norm)]
-    return df.select(*renamed, cks.alias(_CKS), *knorm_cols, F.xxhash64(*key_norm).alias(_H))
+    return t.make_select().selectExpr(
+        *side.renamed, f"{side.cks} AS {_CKS}", *side.knorm_exprs(), side.keyhash_expr()
+    )
+
+
+def _bucket_of(n: int) -> str:
+    return f"pmod({_H}, {int(n)})"
 
 
 def _bucket_digest(df: DataFrame, n_buckets: int) -> DataFrame:
     return (
-        df.select(F.pmod(F.col(_H), F.lit(n_buckets)).alias(_BUCKET), _CKS)
+        df.selectExpr(f"{_bucket_of(n_buckets)} AS {_BUCKET}", _CKS)
         .groupBy(_BUCKET)
-        .agg(F.count(F.lit(1)).alias(_CNT), F.sum(_CKS).alias(_SUM))
+        .agg(F.expr(f"count(1) AS {_CNT}"), F.expr(f"sum({_CKS}) AS {_SUM}"))
     )
 
 
@@ -137,28 +145,39 @@ def _paired_digest(a: DataFrame, b: DataFrame, n_buckets: int):
 
     Returns ({bucket: (ca, sa)}, {bucket: (cb, sb)}, rows_total_a)."""
     side = "__side__"
-    u = a.select(
-        F.pmod(F.col(_H), F.lit(n_buckets)).alias(_BUCKET), _CKS, F.lit(0).alias(side)
-    ).unionAll(
-        b.select(
-            F.pmod(F.col(_H), F.lit(n_buckets)).alias(_BUCKET), _CKS, F.lit(1).alias(side)
-        )
+    bucket = f"{_bucket_of(n_buckets)} AS {_BUCKET}"
+    u = a.selectExpr(bucket, _CKS, f"0 AS {side}").unionAll(
+        b.selectExpr(bucket, _CKS, f"1 AS {side}")
     )
-    is_a = (F.col(side) == 0).cast("long")
+    is_a = f"cast(({side} = 0) as bigint)"
     rows = (
         u.groupBy(_BUCKET)
-        .agg(
-            F.sum(is_a).alias("ca"),
-            F.sum(1 - is_a).alias("cb"),
-            F.sum(F.when(F.col(side) == 0, F.col(_CKS))).alias("sa"),
-            F.sum(F.when(F.col(side) == 1, F.col(_CKS))).alias("sb"),
-        )
+        .agg(*[F.expr(e) for e in (
+            f"sum({is_a}) AS ca",
+            f"sum(1 - {is_a}) AS cb",
+            f"sum(CASE WHEN {side} = 0 THEN {_CKS} END) AS sa",
+            f"sum(CASE WHEN {side} = 1 THEN {_CKS} END) AS sb",
+        )])
         .collect()
     )
     da = {r[_BUCKET]: (r["ca"], r["sa"]) for r in rows if r["ca"]}
     db = {r[_BUCKET]: (r["cb"], r["sb"]) for r in rows if r["cb"]}
     rows_total = sum(c for c, _ in da.values())
     return da, db, rows_total
+
+
+def _restrict(df: DataFrame, ids: List, n: int) -> DataFrame:
+    """Restrict `df` to the buckets `ids` of an n-bucket level (bucket ids
+    are ints the digests produced; a full id set prunes nothing)."""
+    if len(ids) >= n:
+        return df
+    if not ids:
+        return df.filter("false")  # folds to an empty relation
+    if len(ids) <= _ISIN_LIMIT:
+        # IN over a literal set compiles to a hash-set probe (InSet)
+        return df.filter(f"{_bucket_of(n)} IN ({', '.join(str(int(x)) for x in ids)})")
+    bad_df = df.sparkSession.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
+    return _restrict_join(df, bad_df, n, broadcast=True)
 
 
 def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
@@ -168,21 +187,17 @@ def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
     sibling of _restrict's literal InSet probe. broadcast=True ships the
     id frame to every task (one long column; ~16 bytes/id); above
     _BROADCAST_KEYS_LIMIT the caller leaves the join shape to AQE."""
-    bucket = F.pmod(F.col(_H), F.lit(n))
     rhs = F.broadcast(ids_df) if broadcast else ids_df
-    return (df.withColumn(_BUCKET, bucket)
+    return (df.selectExpr("*", f"{_bucket_of(n)} AS {_BUCKET}")
             .join(rhs, _BUCKET, "left_semi").drop(_BUCKET))
 
 
 def mismatched_buckets(da: DataFrame, db: DataFrame) -> DataFrame:
     """Bucket ids whose (count, checksum-sum) digests differ between sides."""
-    a = da.select(F.col(_BUCKET), F.col(_CNT).alias("ca"), F.col(_SUM).alias("sa"))
-    b = db.select(F.col(_BUCKET), F.col(_CNT).alias("cb"), F.col(_SUM).alias("sb"))
+    a = da.selectExpr(_BUCKET, f"{_CNT} AS ca", f"{_SUM} AS sa")
+    b = db.selectExpr(_BUCKET, f"{_CNT} AS cb", f"{_SUM} AS sb")
     j = a.join(b, on=_BUCKET, how="full_outer")
-    differs = (
-        ~F.col("ca").eqNullSafe(F.col("cb")) | ~F.col("sa").eqNullSafe(F.col("sb"))
-    )
-    return j.filter(differs).select(_BUCKET)
+    return j.filter("NOT (ca <=> cb) OR NOT (sa <=> sb)").select(_BUCKET)
 
 
 def hash_diff(
@@ -225,12 +240,13 @@ def hash_diff(
     keys = list(t1.key_columns)
     nkeys = len(keys)
 
+    s1, s2 = _side_sql(t1, cols1, out_names), _side_sql(t2, cols2, out_names)
     if persist == "narrow":
-        a = _annotated_narrow(t1, cols1).persist()
-        b = _annotated_narrow(t2, cols2).persist()
+        a = _annotated_narrow(t1, s1).persist()
+        b = _annotated_narrow(t2, s2).persist()
     else:
-        a = _annotated(t1, cols1, out_names).persist()
-        b = _annotated(t2, cols2, out_names).persist()
+        a = _annotated(t1, s1).persist()
+        b = _annotated(t2, s2).persist()
 
     # --- level 1: coarse digests (DEFAULT_N_BUCKETS) ------------------------
     # The reference recursively bisects because remote round-trips dominate;
@@ -247,19 +263,6 @@ def hash_diff(
     # yields the exact row count for fine-level sizing for free.
     da, db, rows_total = _paired_digest(a, b, coarse_n)
     bad_ids = [k for k in set(da) | set(db) if da.get(k) != db.get(k)]
-
-    def _restrict(df: DataFrame, ids: List, n: int) -> DataFrame:
-        bucket = F.pmod(F.col(_H), F.lit(n))
-        if len(ids) >= n:
-            return df
-        if len(ids) <= _ISIN_LIMIT:
-            # isin over a literal set compiles to a hash-set probe (InSet)
-            return df.filter(bucket.isin(ids))
-        spark = df.sparkSession
-        bad_df = F.broadcast(
-            spark.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
-        )
-        return df.withColumn(_BUCKET, bucket).join(bad_df, _BUCKET, "left_semi").drop(_BUCKET)
 
     a_bad = _restrict(a, bad_ids, coarse_n)
     b_bad = _restrict(b, bad_ids, coarse_n)
@@ -313,16 +316,24 @@ def hash_diff(
     # NORMALIZED key strings carried from _annotated — the same canonical
     # form the digests hash — not the raw renamed key values, whose
     # types/trimming may differ across sides.
-    u = a_bad.withColumn(SIGN_COL, F.lit("-")).unionAll(
-        b_bad.withColumn(SIGN_COL, F.lit("+"))
+    u = a_bad.selectExpr("*", f"'-' AS {SIGN_COL}").unionAll(
+        b_bad.selectExpr("*", f"'+' AS {SIGN_COL}")
     )
-    is_a = (F.col(SIGN_COL) == "-").cast("long")
     knorm_names = [_knorm(i) for i in range(nkeys)]
+    # per-key (count, checksum-sum) of each side; `over` turns them into
+    # window aggregates for the wide path
+    is_a = f"cast(({SIGN_COL} = '-') as bigint)"
+    digests = (
+        f"sum({is_a})",
+        f"sum(1 - {is_a})",
+        f"sum(CASE WHEN {SIGN_COL} = '-' THEN {_CKS} END)",
+        f"sum(CASE WHEN {SIGN_COL} = '+' THEN {_CKS} END)",
+    )
 
     def _pk_differs(ca, cb, sa, sb):
-        multiset = (ca != cb) | ~sa.eqNullSafe(sb)
+        multiset = f"(NOT ({ca} = {cb}) OR NOT ({sa} <=> {sb}))"
         if emit_equal_duplicates:
-            return (ca != 1) | (cb != 1) | multiset
+            return f"((NOT ({ca} = 1) OR NOT ({cb} = 1)) OR {multiset})"
         return multiset
 
     if persist == "narrow":
@@ -337,47 +348,49 @@ def hash_diff(
         # count job read 1.8-3.5s at sf0.1 for ~30k rows; at scale the
         # partial agg also shuffles per-key digests, never rows). The
         # per-key decision expression is identical.
+        names = ("__ca__", "__cb__", "__sa__", "__sb__")
         g = u.groupBy(*knorm_names).agg(
-            F.sum(is_a).alias("__ca__"),
-            F.sum(1 - is_a).alias("__cb__"),
-            F.sum(F.when(F.col(SIGN_COL) == "-", F.col(_CKS))).alias("__sa__"),
-            F.sum(F.when(F.col(SIGN_COL) == "+", F.col(_CKS))).alias("__sb__"),
+            *[F.expr(f"{d} AS {n}") for d, n in zip(digests, names)]
         )
-        bad_cached = g.filter(_pk_differs(
-            F.col("__ca__"), F.col("__cb__"), F.col("__sa__"),
-            F.col("__sb__"),
-        )).select(*knorm_names).persist()
+        bad = g.filter(_pk_differs(*names)).select(*knorm_names)
         # The differing-key set is proportional to the DIFF count, not the
         # table: broadcast it so the pruned re-read is scan+broadcast-semi,
         # never a full shuffle of both sides (unbroadcast, the semi join
         # sort-merge-shuffled 6M rows per side and narrow ran 5x slower
         # than wide at sf0.1). Above the cap, fall back to AQE's choice.
-        bad_keys = (
-            F.broadcast(bad_cached)
-            if bad_cached.count() <= _BROADCAST_KEYS_LIMIT
-            else bad_cached
+        # dirty_rows (the coarse dirty-bucket rows of both sides, already
+        # on the driver) bounds the key set from above: at or below the
+        # cap the set is broadcast without a sizing action, and each emit
+        # leg evaluates it itself (an aggregation over the dirty rows
+        # only; measured flat against persisting it once at 50k rows /
+        # 0.02% changed and 200k rows / 5% changed, 9 jobs instead of 11).
+        # Above the cap, which includes every run that reaches the fine
+        # level, the bound says nothing: persist the set and count it.
+        if dirty_rows <= _BROADCAST_KEYS_LIMIT:
+            bad_keys = F.broadcast(bad)
+        else:
+            bad = bad.persist()
+            extra_handles.append(bad)
+            bad_keys = (
+                F.broadcast(bad)
+                if bad.count() <= _BROADCAST_KEYS_LIMIT
+                else bad
+            )
+        out = _narrow_emit(t1, out_names, "-", bad_keys, s1).unionAll(
+            _narrow_emit(t2, out_names, "+", bad_keys, s2)
         )
-        out = _narrow_emit(t1, cols1, out_names, "-", bad_keys).unionAll(
-            _narrow_emit(t2, cols2, out_names, "+", bad_keys)
-        )
-        out._ddspark_persisted = [a, b, bad_cached, *extra_handles]
+        out._ddspark_persisted = [a, b, *extra_handles]
         return out
     # wide path: the full rows ride the frames, so emission is per ROW —
     # the window form computes the per-key digests alongside each row in
     # one pass (an aggregation would need a join back to the rows)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*knorm_names)
-    emitted = u.withColumn(
-        "__emit__",
-        _pk_differs(
-            F.sum(is_a).over(w),
-            F.sum(1 - is_a).over(w),
-            F.sum(F.when(F.col(SIGN_COL) == "-", F.col(_CKS))).over(w),
-            F.sum(F.when(F.col(SIGN_COL) == "+", F.col(_CKS))).over(w),
-        ),
-    ).filter(F.col("__emit__"))
-    out = emitted.select(SIGN_COL, *out_names)
+    w = f" OVER (PARTITION BY {', '.join(knorm_names)})"
+    emit = _pk_differs(*[d + w for d in digests])
+    out = (
+        u.selectExpr("*", f"{emit} AS __emit__")
+        .filter("__emit__")
+        .selectExpr(SIGN_COL, *map(q, out_names))
+    )
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
     # sides must outlive it. DiffResult.unpersist() (and the CLI) release
     # them once the diff is materialized; long-lived sessions doing many

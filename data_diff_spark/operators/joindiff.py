@@ -17,10 +17,10 @@ from __future__ import annotations
 
 from typing import List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_diff_spark.normalize import normalize_as_string
+from data_diff_spark.normalize import normalize_sql, quote_ident as q
 from data_diff_spark.table import TableSegment
 
 _A = "__a_"
@@ -28,6 +28,7 @@ _B = "__b_"
 _PRESENT_A = "__a_present__"
 _PRESENT_B = "__b_present__"
 SIGN_COL = "sign"
+_DIFF = "__diff_"
 
 
 def _check_consistent(t1: TableSegment, t2: TableSegment) -> Tuple[List[str], List[str]]:
@@ -42,27 +43,14 @@ def _check_consistent(t1: TableSegment, t2: TableSegment) -> Tuple[List[str], Li
     return cols1, cols2
 
 
-def _norm_kind(col: Column, dt, p, kind: str | None) -> Column:
-    from data_diff_spark.normalize import normalize_json, normalize_uuid
-
-    if kind == "uuid":
-        return normalize_uuid(col)
-    if kind == "json":
-        return normalize_json(col)
-    return normalize_as_string(col, dt, p)
-
-
-def _value_eq(a: Column, b: Column, dt1, dt2, p1, p2, k1=None, k2=None) -> Column:
-    """NULL-safe equality; when the two sides' physical types differ — or a
-    refined semantic kind (uuid/json, refine.py) applies — compare canonical
-    normalized strings (the reference's cross-type semantics)."""
-    if k1 or k2:
-        return _norm_kind(a, dt1, p1, k1).eqNullSafe(_norm_kind(b, dt2, p2, k2))
-    if dt1 == dt2 and p1 is None and p2 is None:
-        return a.eqNullSafe(b)
-    # differing physical types OR a declared/unified precision (unify.py):
-    # compare canonical normalized strings
-    return normalize_as_string(a, dt1, p1).eqNullSafe(normalize_as_string(b, dt2, p2))
+def _value_eq_sql(a: str, b: str, dt1, dt2, p1, p2, k1=None, k2=None) -> str:
+    """NULL-safe equality; when the two sides' physical types differ, a
+    declared/unified precision (unify.py) applies, or a refined semantic
+    kind (uuid/json, refine.py) applies, compare canonical normalized
+    strings (the reference's cross-type semantics)."""
+    if not (k1 or k2) and dt1 == dt2 and p1 is None and p2 is None:
+        return f"({a} <=> {b})"
+    return f"({normalize_sql(a, dt1, p1, k1)} <=> {normalize_sql(b, dt2, p2, k2)})"
 
 
 def joined_frame(
@@ -81,51 +69,47 @@ def joined_frame(
     ZERO-SHUFFLE sort-merge join — the 100 TB repeated-diff path. Safe
     whenever keys are non-null (the reference raises on null PKs by
     default; run check_null_keys first). Null-keyed rows, if any survive,
-    surface as exclusive rows on both sides instead of matching."""
+    surface as exclusive rows on both sides instead of matching.
+
+    Each projection is one SQL text (normalize.py explains why)."""
     cols1, cols2 = _check_consistent(t1, t2)
     dt1 = {f.name: f.dataType for f in t1.schema.fields}
     dt2 = {f.name: f.dataType for f in t2.schema.fields}
+    p1, p2 = t1.precision_overrides, t2.precision_overrides
+    kd1, kd2 = t1.kind_overrides, t2.kind_overrides
 
-    a = t1.make_select().select(
-        F.lit(True).alias(_PRESENT_A), *[F.col(c).alias(_A + c) for c in cols1]
+    a = t1.make_select().selectExpr(
+        f"true AS {q(_PRESENT_A)}", *[f"{q(c)} AS {q(_A + c)}" for c in cols1]
     )
-    b = t2.make_select().select(
-        F.lit(True).alias(_PRESENT_B), *[F.col(c).alias(_B + c) for c in cols2]
+    b = t2.make_select().selectExpr(
+        f"true AS {q(_PRESENT_B)}", *[f"{q(c)} AS {q(_B + c)}" for c in cols2]
     )
 
-    on = None
+    conds = []
     for k1, k2 in zip(t1.key_columns, t2.key_columns):
-        ka, kb = t1.kind_overrides.get(k1), t2.kind_overrides.get(k2)
-        ca, cb = F.col(_A + k1), F.col(_B + k2)
-        if ka or kb:
+        ca, cb = q(_A + k1), q(_B + k2)
+        if kd1.get(k1) or kd2.get(k2):
             # refined key kinds (e.g. uuid-in-string): join on canonical form
-            ca = _norm_kind(ca, dt1[k1], t1.precision_overrides.get(k1), ka)
-            cb = _norm_kind(cb, dt2[k2], t2.precision_overrides.get(k2), kb)
-        cond = ca.eqNullSafe(cb) if null_safe_keys else (ca == cb)
-        on = cond if on is None else on & cond
-    j = a.join(b, on=on, how="full_outer")
-
-    is_excl_a = F.col(_PRESENT_B).isNull()
-    is_excl_b = F.col(_PRESENT_A).isNull()
+            ca = normalize_sql(ca, dt1[k1], p1.get(k1), kd1.get(k1))
+            cb = normalize_sql(cb, dt2[k2], p2.get(k2), kd2.get(k2))
+        conds.append(f"({ca} <=> {cb})" if null_safe_keys else f"({ca} = {cb})")
+    j = a.join(b, on=F.expr(" AND ".join(conds)), how="full_outer")
 
     # IS DISTINCT FROM per column across the outer join — exclusive rows
     # count as different in every column, exactly like the reference's
     # is_diff_* flags (joindiff_tables.py:326).
     nkeys = len(t1.key_columns)
-    flags = []
-    for c1, c2 in zip(cols1[nkeys:], cols2[nkeys:]):
-        eq = _value_eq(
-            F.col(_A + c1), F.col(_B + c2),
-            dt1[c1], dt2[c2],
-            t1.precision_overrides.get(c1), t2.precision_overrides.get(c2),
-            t1.kind_overrides.get(c1), t2.kind_overrides.get(c2),
-        )
-        flags.append((~eq).alias(f"__diff_{c1}"))
-
-    j = j.select(
+    flags = [
+        "NOT " + _value_eq_sql(
+            q(_A + c1), q(_B + c2), dt1[c1], dt2[c2],
+            p1.get(c1), p2.get(c2), kd1.get(c1), kd2.get(c2),
+        ) + f" AS {q(_DIFF + c1)}"
+        for c1, c2 in zip(cols1[nkeys:], cols2[nkeys:])
+    ]
+    j = j.selectExpr(
         "*",
-        is_excl_a.alias("is_exclusive_a"),
-        is_excl_b.alias("is_exclusive_b"),
+        f"{q(_PRESENT_B)} IS NULL AS is_exclusive_a",
+        f"{q(_PRESENT_A)} IS NULL AS is_exclusive_b",
         *flags,
     )
     return j, cols1, cols2
@@ -140,34 +124,29 @@ def join_diff(
     rows (array_compact drops the non-applicable side), so the join is never
     recomputed for a union of branches. See joined_frame for null_safe_keys
     (the bucketed zero-shuffle path).
+
+    The flags stay in joined_frame's Project, BELOW the Generate: both CASE
+    branches read them as attributes, so each is computed once per row.
     """
     j, cols1, cols2 = joined_frame(t1, t2, null_safe_keys=null_safe_keys)
     nkeys = len(t1.key_columns)
-    diff_cols = [f"__diff_{c}" for c in cols1[nkeys:]]
+    any_diff = " OR ".join(
+        f"coalesce({q(_DIFF + c)}, false)" for c in cols1[nkeys:]
+    ) or "false"
+    row_differs = f"((is_exclusive_a OR is_exclusive_b) OR ({any_diff}))"
 
-    any_diff = F.lit(False)
-    for d in diff_cols:
-        any_diff = any_diff | F.coalesce(F.col(d), F.lit(False))
-    row_differs = F.col("is_exclusive_a") | F.col("is_exclusive_b") | any_diff
+    def side(present: str, sign: str, prefix: str, cols: List[str]) -> str:
+        fields = ", ".join(
+            f"{q(prefix + c)} AS {q(c1)}" for c, c1 in zip(cols, cols1)
+        )
+        return (
+            f"CASE WHEN ({q(present)} IS NOT NULL AND {row_differs}) "
+            f"THEN struct('{sign}' AS {q(SIGN_COL)}, {fields}) END"
+        )
 
-    minus = F.when(
-        F.col(_PRESENT_A).isNotNull() & row_differs,
-        F.struct(
-            F.lit("-").alias(SIGN_COL),
-            *[F.col(_A + c1).alias(c1) for c1 in cols1],
-        ),
-    )
-    plus = F.when(
-        F.col(_PRESENT_B).isNotNull() & row_differs,
-        F.struct(
-            F.lit("+").alias(SIGN_COL),
-            *[F.col(_B + c2).alias(c1) for c1, c2 in zip(cols1, cols2)],
-        ),
-    )
-    return (
-        j.select(F.explode(F.array_compact(F.array(minus, plus))).alias("r"))
-        .select("r.*")
-    )
+    minus = side(_PRESENT_A, "-", _A, cols1)
+    plus = side(_PRESENT_B, "+", _B, cols2)
+    return j.selectExpr(f"explode(array_compact(array({minus}, {plus}))) AS r").selectExpr("r.*")
 
 
 # ---- guard / stats / sampling operators (reference §2.1) -----------------
@@ -207,15 +186,13 @@ def count_diff_per_column(t1: TableSegment, t2: TableSegment) -> DataFrame:
     j, cols1, _ = joined_frame(t1, t2)
     nkeys = len(t1.key_columns)
     aggs = [
-        F.count(F.lit(1)).alias("rows_joined"),
-        F.sum(F.col("is_exclusive_a").cast("long")).alias("exclusive_a"),
-        F.sum(F.col("is_exclusive_b").cast("long")).alias("exclusive_b"),
+        "count(1) AS rows_joined",
+        "sum(cast(is_exclusive_a as bigint)) AS exclusive_a",
+        "sum(cast(is_exclusive_b as bigint)) AS exclusive_b",
+        *[f"sum(cast(coalesce({q(_DIFF + c)}, false) as bigint)) AS {q('diff_' + c)}"
+          for c in cols1[nkeys:]],
     ]
-    for c in cols1[nkeys:]:
-        aggs.append(
-            F.sum(F.coalesce(F.col(f"__diff_{c}"), F.lit(False)).cast("long")).alias(f"diff_{c}")
-        )
-    return j.agg(*aggs)
+    return j.agg(*[F.expr(a) for a in aggs])
 
 
 def sample_exclusive_rows(t1: TableSegment, t2: TableSegment, n: int = 10) -> DataFrame:

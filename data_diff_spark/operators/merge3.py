@@ -31,7 +31,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_diff_spark.normalize import normalized_columns
+from data_diff_spark.normalize import fingerprint_sql, normalized_sql, quote_ident as q
 from data_diff_spark.table import TableSegment, table_segment
 
 STATUS_COL = "merge_status"
@@ -40,14 +40,11 @@ STATUS_COL = "merge_status"
 def _prepared(t: TableSegment, tag: str) -> DataFrame:
     cols = list(t.relevant_columns)
     nkeys = len(t.key_columns)
-    normd = normalized_columns(t.schema, cols, t.precision_overrides, t.kind_overrides)
-    fp = F.md5(
-        F.concat_ws("|", *[F.coalesce(c, F.lit("<null>")) for c in normd])
-    )
-    return t.make_select().select(
-        *[F.col(c).alias(f"{tag}_k{i}") for i, c in enumerate(cols[:nkeys])],
-        fp.alias(f"{tag}_fp"),
-        F.struct(*[F.col(c) for c in cols]).alias(f"{tag}_row"),
+    normd = normalized_sql(t.schema, cols, t.precision_overrides, t.kind_overrides)
+    return t.make_select().selectExpr(
+        *[f"{q(c)} AS {q(f'{tag}_k{i}')}" for i, c in enumerate(cols[:nkeys])],
+        f"md5({fingerprint_sql(normd)}) AS {q(tag + '_fp')}",
+        f"struct({', '.join(map(q, cols))}) AS {q(tag + '_row')}",
     )
 
 

@@ -51,7 +51,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_diff_spark.constants import CHECKSUM_OFFSET
-from data_diff_spark.normalize import md5_as_int, normalized_columns, row_fingerprint
+from data_diff_spark.normalize import (
+    fingerprint_sql,
+    md5_as_int_sql,
+    normalized_sql,
+    null_safe_sql,
+    quote_ident as q,
+)
 from data_diff_spark.operators.joindiff import SIGN_COL
 from data_diff_spark.table import TableSegment
 
@@ -63,9 +69,9 @@ _CKS = "__cks__"
 _DECIMAL_RE = re.compile(r"(?:DECIMAL|NUMERIC)\s*\(\s*\d+\s*,\s*(\d+)\s*\)")
 
 
-def _spark_bucket(key_norm: List, n_buckets: int):
-    joined = F.concat_ws("|", *[F.coalesce(c, F.lit("<null>")) for c in key_norm])
-    return F.pmod(F.conv(F.substring(F.md5(joined), 1, 8), 16, 10).cast("long"), F.lit(n_buckets))
+def _spark_bucket_sql(key_norm: Sequence[str], n_buckets: int) -> str:
+    joined = f"concat_ws('|', {', '.join(null_safe_sql(k) for k in key_norm)})"
+    return f"pmod(cast(conv(substring(md5({joined}), 1, 8), 16, 10) as bigint), {int(n_buckets)})"
 
 
 # --- dialects ---------------------------------------------------------------
@@ -166,7 +172,7 @@ class RemoteDialect:
 
     def bucket_sql(self, key_fp: str, n_buckets: int) -> str:
         """First 8 md5 hex digits of the key fingerprint, mod n_buckets —
-        must match _spark_bucket bit-for-bit."""
+        must match _spark_bucket_sql bit-for-bit."""
         raise NotImplementedError
 
 
@@ -1016,23 +1022,23 @@ def hash_diff_remote(
         while n_buckets * TARGET_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
             n_buckets <<= 1
 
-    normd = normalized_columns(t1.schema, cols, t1.precision_overrides, t1.kind_overrides)
-    key_norm = normalized_columns(t1.schema, cols[:len(keys)], t1.precision_overrides, t1.kind_overrides)
+    normd = normalized_sql(t1.schema, cols, t1.precision_overrides, t1.kind_overrides)
+    key_norm = normd[:len(keys)]
     a = (
         t1.make_select()
-        .select(
-            *cols,
+        .selectExpr(
+            *map(q, cols),
             # long (not decimal): 49-bit values, and pandas/Arrow int64
             # round-trips exactly when remote rows are unioned in
-            md5_as_int(row_fingerprint(normd)).cast("long").alias(_CKS),
-            _spark_bucket(key_norm, n_buckets).alias(_BUCKET),
+            f"{md5_as_int_sql(fingerprint_sql(normd), 'bigint')} AS {_CKS}",
+            f"{_spark_bucket_sql(key_norm, n_buckets)} AS {_BUCKET}",
         )
         .persist()
     )
 
     digests = (
         a.groupBy(_BUCKET)
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum(_CKS).cast("long").alias("cks"))
+        .agg(F.expr("count(1) AS cnt"), F.expr(f"cast(sum({_CKS}) as bigint) AS cks"))
         .toArrow()  # columnar driver transfer: no per-row Row objects
     )
     local = {
@@ -1066,10 +1072,8 @@ def hash_diff_remote(
     if fetch_ids is None:
         b_df = b_df.join(F.broadcast(bad_df), _BUCKET, "left_semi")
 
-    from pyspark.sql import Window
-
-    u = a_bad.withColumn(SIGN_COL, F.lit("-")).unionByName(
-        b_df.withColumn(SIGN_COL, F.lit("+"))
+    u = a_bad.selectExpr("*", f"'-' AS {SIGN_COL}").unionByName(
+        b_df.selectExpr("*", f"'+' AS {SIGN_COL}")
     )
     # Partition the multiset windows by the NORMALIZED key strings — the same
     # canonical form the bucket digests hash. Raw-value partitioning would
@@ -1081,18 +1085,20 @@ def hash_diff_remote(
     # expression-valued partition specs don't collapse — Catalyst re-projects
     # the partition expression per aggregate and plans four Window nodes with
     # four identical shuffles. AttributeReference specs collapse to ONE.
-    key_norm_u = normalized_columns(t1.schema, keys, t1.precision_overrides, t1.kind_overrides)
     knames = [f"__knorm{i}__" for i in range(len(keys))]
-    u = u.select(
-        "*", *[F.coalesce(c, F.lit("<null>")).alias(n) for c, n in zip(key_norm_u, knames)]
+    u = u.selectExpr(
+        "*", *[f"{null_safe_sql(k)} AS {n}" for k, n in zip(key_norm, knames)]
     )
-    w = Window.partitionBy(*knames)
-    is_a = (F.col(SIGN_COL) == "-").cast("long")
-    ca = F.sum(is_a).over(w)
-    cb = F.sum(1 - is_a).over(w)
-    sa = F.sum(F.when(F.col(SIGN_COL) == "-", F.col(_CKS))).over(w)
-    sb = F.sum(F.when(F.col(SIGN_COL) == "+", F.col(_CKS))).over(w)
-    differs = (ca != cb) | ~sa.eqNullSafe(sb)
-    out = u.withColumn("__emit__", differs).filter("__emit__").select(SIGN_COL, *cols)
+    w = f"OVER (PARTITION BY {', '.join(knames)})"
+    is_a = f"cast(({SIGN_COL} = '-') as bigint)"
+    ca, cb = f"sum({is_a}) {w}", f"sum(1 - {is_a}) {w}"
+    sa = f"sum(CASE WHEN {SIGN_COL} = '-' THEN {_CKS} END) {w}"
+    sb = f"sum(CASE WHEN {SIGN_COL} = '+' THEN {_CKS} END) {w}"
+    differs = f"NOT ({ca} = {cb}) OR NOT ({sa} <=> {sb})"
+    out = (
+        u.selectExpr("*", f"{differs} AS __emit__")
+        .filter("__emit__")
+        .selectExpr(SIGN_COL, *map(q, cols))
+    )
     out._ddspark_persisted = [a]  # released via DiffResult.unpersist()
     return out

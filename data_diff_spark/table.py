@@ -12,12 +12,18 @@ partitioning aligns both sides by construction.
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
+from functools import cached_property
 from typing import Any, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_diff_spark.normalize import normalized_columns, row_checksum
+from data_diff_spark.normalize import (
+    normalize_sql,
+    normalized_sql,
+    quote_ident,
+    row_checksum_sql,
+)
 
 
 @dataclass(frozen=True)
@@ -52,15 +58,15 @@ class TableSegment:
         if not self.case_sensitive:
             # resolve declared names against actual DataFrame casing
             # (reference CaseInsensitiveDict, utils.py:81-117)
-            lookup = {c.lower(): c for c in self.df.columns}
+            lookup = {c.lower(): c for c in self.schema.names}
             fix = lambda n: lookup.get(n.lower(), n)
             object.__setattr__(self, "key_columns", tuple(fix(k) for k in self.key_columns))
             if self.update_column:
                 object.__setattr__(self, "update_column", fix(self.update_column))
             object.__setattr__(self, "extra_columns", tuple(fix(c) for c in self.extra_columns))
-        missing = [c for c in self.relevant_columns if c not in self.df.columns]
+        missing = [c for c in self.relevant_columns if c not in self.schema.names]
         if missing:
-            raise ValueError(f"columns not in DataFrame: {missing} (have {self.df.columns})")
+            raise ValueError(f"columns not in DataFrame: {missing} (have {self.schema.names})")
 
     # -- column sets ------------------------------------------------------
 
@@ -118,7 +124,10 @@ class TableSegment:
         pred = self._range_predicate()
         if pred is not None:
             df = df.filter(pred)
-        df = df.select(*self.relevant_columns)
+        cols = list(self.relevant_columns)
+        if cols != self.schema.names:
+            # SQL text: select(*names) costs a py4j Column call per name
+            df = df.selectExpr(*map(quote_ident, cols))
         for h in self.hints:
             df = df.hint(h)
         return df
@@ -129,18 +138,18 @@ class TableSegment:
         """SELECT count(*) (table_segment.py:235-237)."""
         return self.make_select().count()
 
+    def checksum_sql(self) -> str:
+        return row_checksum_sql(self.schema, self.relevant_columns, self.precision_overrides, self.kind_overrides)
+
     def checksum_column(self) -> Column:
-        return row_checksum(self.schema, self.relevant_columns, self.precision_overrides, self.kind_overrides)
+        return F.expr(self.checksum_sql())
 
     def count_and_checksum(self) -> Tuple[int, Optional[int]]:
         """One-pass count(*) + sum(md5_as_int(fingerprint))
         (table_segment.py:239-258)."""
         row = (
             self.make_select()
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(self.checksum_column()).alias("cks"),
-            )
+            .agg(F.expr("count(1) AS cnt"), F.expr(f"sum({self.checksum_sql()}) AS cks"))
             .collect()[0]
         )
         cks = row["cks"]
@@ -156,13 +165,12 @@ class TableSegment:
         by_name = {f.name: f for f in self.schema.fields}
         aggs = []
         for k in self.key_columns:
-            lo, hi = F.min(k), F.max(k)
+            lo, hi = f"min({quote_ident(k)})", f"max({quote_ident(k)})"
             if normalized:
-                from data_diff_spark.normalize import normalize_as_string
-
                 dt, p = by_name[k].dataType, self.precision_overrides.get(k)
-                lo, hi = normalize_as_string(lo, dt, p), normalize_as_string(hi, dt, p)
-            aggs += [lo.alias(f"min_{k}"), hi.alias(f"max_{k}")]
+                lo, hi = normalize_sql(lo, dt, p), normalize_sql(hi, dt, p)
+            aggs += [F.expr(f"{lo} AS {quote_ident('min_' + k)}"),
+                     F.expr(f"{hi} AS {quote_ident('max_' + k)}")]
         row = self.make_select().agg(*aggs).collect()[0]
         mins = tuple(row[f"min_{k}"] for k in self.key_columns)
         maxs = tuple(row[f"max_{k}"] for k in self.key_columns)
@@ -173,9 +181,9 @@ class TableSegment:
     def get_values(self) -> DataFrame:
         """All relevant columns, normalized to canonical strings
         (table_segment.py:181-187) — kept distributed, never collected."""
-        return self.make_select().select(
-            *normalized_columns(self.schema, self.relevant_columns, self.precision_overrides, self.kind_overrides)
-        )
+        return self.make_select().selectExpr(*normalized_sql(
+            self.schema, self.relevant_columns, self.precision_overrides,
+            self.kind_overrides, aliased=True))
 
     def collect_stats(self) -> dict:
         """count(*) plus sum(col) for every numeric compared column, in ONE
@@ -206,8 +214,10 @@ class TableSegment:
 
     # -- helpers -----------------------------------------------------------
 
-    @property
+    @cached_property
     def schema(self):
+        """The frame's schema, fetched once: every fetch is a py4j round trip
+        plus a JSON parse, and a diff reads it for each projection."""
         return self.df.schema
 
     def with_(self, **kw) -> "TableSegment":

@@ -4375,8 +4375,7 @@ def q_export_roundtrip_checksums(spark, sf_dir):
     import shutil
     import tempfile
 
-    from data_diff_spark.constants import NULL_LITERAL
-    from data_diff_spark.normalize import md5_as_int
+    from data_diff_spark.normalize import fingerprint_sql, md5_as_int_sql
     from data_diff_spark.sources.export import (
         read_arrow_shards,
         read_webdataset,
@@ -4410,12 +4409,9 @@ def q_export_roundtrip_checksums(spark, sf_dir):
         rows_per_shard=4096).count()
 
     def cks_agg(df):
-        fp = F.concat_ws(
-            "|", *[F.coalesce(F.col(c), F.lit(NULL_LITERAL)) for c in ORDERS_COLS])
+        cks = md5_as_int_sql(fingerprint_sql(ORDERS_COLS))
         return df.agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(md5_as_int(fp)).cast("string").alias("cks"),
-        )
+            F.expr("count(1) AS cnt"), F.expr(f"cast(sum({cks}) as string) AS cks"))
 
     back_a = read_arrow_shards(spark, a_dir).select(*ORDERS_COLS)
     back_w = read_webdataset(

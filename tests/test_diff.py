@@ -327,6 +327,7 @@ def test_fine_level_large_id_set_stays_jvm_side(spark, monkeypatch):
         (8192, 2_000_000),  # small set: literal InSet probe
         (1, 2_000_000),     # large set: broadcast the id frame
         (1, 1),             # too big to broadcast: plain left-semi (AQE)
+        (8192, 100),        # dirty rows above the cap, counted keys below it
     ):
         monkeypatch.setattr(H, "_ISIN_LIMIT", isin_limit)
         monkeypatch.setattr(H, "_BROADCAST_KEYS_LIMIT", bkeys_limit)

@@ -321,3 +321,47 @@ def test_lsh_incremental_stored_side_no_exchange(spark, sf_dir, tmp_path_factory
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"drop table if exists {p['bands_table']}")
+
+
+def _nodes(plan, name):
+    """Every node called `name` in a JVM plan tree, pre-order."""
+    out = [plan] if plan.nodeName() == name else []
+    children = plan.children()
+    for i in range(children.size()):
+        out += _nodes(children.apply(i), name)
+    return out
+
+
+def test_joindiff_flags_projected_once_below_generate(spark):
+    """join_diff's per-column __diff_* and is_exclusive_* flags are computed
+    once per joined row, in the Project under the Generate; both CASE
+    branches of the generator read them as attributes. Inlining them into
+    the branches would normalize and compare every column twice per row
+    with the same output, so only the plan shows it."""
+    from decimal import Decimal
+
+    from data_diff_spark.operators.joindiff import join_diff
+    from data_diff_spark.table import table_segment
+    from data_diff_spark.unify import unify_precisions
+
+    a = spark.createDataFrame(
+        [(1, 1.5, 2, "x"), (2, 2.25, 3, "y")], "id bigint, amount double, qty int, name string")
+    b = spark.createDataFrame(
+        [(1, Decimal("1.50"), 2, "x"), (3, Decimal("4.00"), 5, "z")],
+        "id bigint, amount decimal(12,2), qty bigint, name string")
+    d = join_diff(*unify_precisions(table_segment(a, ["id"]), table_segment(b, ["id"])))
+    (gen,) = _nodes(d._jdf.queryExecution().optimizedPlan(), "Generate")
+    generator = gen.generator().sql().lower()
+    child = gen.child()
+    assert child.nodeName() == "Project"
+    projected = {}
+    for i in range(child.projectList().size()):
+        e = child.projectList().apply(i)
+        projected[e.name()] = e.sql().lower()
+    flags = ["is_exclusive_a", "is_exclusive_b", "__diff_amount", "__diff_qty", "__diff_name"]
+    for f in flags:
+        assert f in projected and f in generator, f
+    # the type-skewed columns are normalized in the Project, not the generator
+    assert "try_cast" in projected["__diff_amount"]
+    assert "<=>" not in generator and "try_cast" not in generator, generator
+    assert sorted((r[0], r[1]) for r in d.collect()) == [("+", 3), ("-", 2)]

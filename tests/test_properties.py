@@ -98,7 +98,8 @@ def test_md5_as_int_matches_python_golden(spark, s):
 
     from data_diff_spark.normalize import md5_as_int
 
-    got = spark.range(1).select(md5_as_int(F.lit(s)).alias("c")).collect()[0]["c"]
+    df = spark.createDataFrame([(s,)], "s string")
+    got = df.select(md5_as_int("s").alias("c")).collect()[0]["c"]
     assert int(got) == str_to_checksum(s)
 
 
@@ -133,7 +134,7 @@ def test_decimal_normalization_matches_duckdb(spark, vals, scale):
     got = [
         r["n"] for r in df.select(
             normalize_as_string(
-                F.col("v").cast(T.DecimalType(24, scale)), T.DecimalType(24, scale)
+                f"cast(v as decimal(24,{scale}))", T.DecimalType(24, scale)
             ).alias("n")
         ).collect()
     ]
@@ -164,7 +165,7 @@ def test_timestamp_normalization_matches_duckdb(spark, ts):
     df = spark.createDataFrame([(t,) for t in ts], "v timestamp_ntz")
     got = [
         r["n"] for r in df.select(
-            normalize_as_string(F.col("v"), T.TimestampNTZType()).alias("n")
+            normalize_as_string("v", T.TimestampNTZType()).alias("n")
         ).collect()
     ]
     con = _duck()
@@ -190,7 +191,7 @@ def test_double_normalization_matches_duckdb(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     got = [
         r["n"] for r in df.select(
-            normalize_as_string(F.col("v"), T.DoubleType()).alias("n")
+            normalize_as_string("v", T.DoubleType()).alias("n")
         ).collect()
     ]
     con = _duck()

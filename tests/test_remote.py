@@ -207,7 +207,7 @@ def test_all_dialects_digest_sql_golden():
 
 def test_dialect_timestamp_canonical_forms():
     """Every dialect's timestamp rendering targets the same canonical
-    'YYYY-MM-DD HH:MM:SS.ffffff' string normalize_timestamp produces."""
+    'YYYY-MM-DD HH:MM:SS.ffffff' string normalize_sql renders."""
     from data_diff_spark.operators.remote import DIALECTS
 
     marks = {

@@ -11,7 +11,6 @@ ANY type poisons a bucket checksum and surfaces as a false diff."""
 import sqlite3
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_diff_spark import table_segment
 from data_diff_spark.operators.remote import SQLiteSide, hash_diff_remote
@@ -166,7 +165,7 @@ def test_double_normalization_edges(spark):
     from data_diff_spark.normalize import normalize_number
 
     want = {r["k"]: r["n"] for r in
-            df.select("k", normalize_number(F.col("d")).alias("n")).collect()}
+            df.select("k", normalize_number("d").alias("n")).collect()}
     c = sqlite3.connect(":memory:")
     SQLiteSide.register(c)
     for i, v in enumerate(vals):

@@ -112,7 +112,7 @@ def test_normalize_time_both_encodings(spark):
     """)
     row = df.select(
         normalize_time("jdbc_time").alias("a"),
-        normalize_time(F.col("iv_time"), data_type=T.DayTimeIntervalType()).alias("b"),
+        normalize_time("iv_time", data_type=T.DayTimeIntervalType()).alias("b"),
         normalize_time("jdbc_time", precision=2).alias("trunc"),
     ).collect()[0]
     want = duckdb.sql(
