@@ -103,12 +103,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="hashdiff checksum buckets (default: auto-sized "
                         "two-level digest scheme; an explicit value forces "
                         "a single fixed level)")
-    p.add_argument("--persist-strategy", default="narrow", choices=["wide", "narrow"],
-                   help="hashdiff cache strategy: narrow (default) caches only "
-                        "keys+checksums and re-reads emitted keys — cache "
-                        "footprint independent of row width; wide caches "
-                        "annotated rows (one scan total) for narrow tables "
-                        "or high diff rates")
     p.add_argument("-m", "--materialize", default=None,
                    help="write diff to this parquet path (or table:NAME) instead of stdout")
     p.add_argument("--materialize-limit", type=int, default=1000)
@@ -215,16 +209,54 @@ def _apply_config(args) -> None:
             setattr(args, attr, val)
 
 
-def _age_bound(spark: SparkSession, age: str):
+def _age_bounds(spark, args) -> dict:
+    """min/max-age boundaries computed ONCE client-side: every query of the
+    run and, in --remote-digest mode, both engines compare against the
+    SAME instant. current_timestamp() in a filter is re-evaluated by each
+    query that reads it, so the digest job, the re-read of the sources and
+    the --stats counts would each see another window; two engine-local
+    now() calls would disagree by query latency (the reference also
+    computes min_update/max_update client-side, table_segment.py)."""
+    out = {}
+    if args.update_column and (args.min_age or args.max_age):
+        from datetime import timedelta
+
+        now = spark.sql("select current_timestamp() as t").first()["t"]
+        if args.min_age:
+            out["lt"] = now - timedelta(seconds=parse_duration_seconds(args.min_age))
+        if args.max_age:
+            out["gt"] = now - timedelta(seconds=parse_duration_seconds(args.max_age))
+    return out
+
+
+def _age_filtered(t, args, bounds: dict):
+    """Restrict a Spark-side segment to the age window of _age_bounds."""
     from pyspark.sql import functions as F
 
-    secs = parse_duration_seconds(age)
-    return F.current_timestamp() - F.expr(f"INTERVAL {secs} SECOND")
+    if not bounds:
+        return t
+    upd = F.col(args.update_column)
+    if "lt" in bounds:
+        t = t.with_(df=t.df.filter(upd < F.lit(bounds["lt"])))
+    if "gt" in bounds:
+        t = t.with_(df=t.df.filter(upd > F.lit(bounds["gt"])))
+    return t
+
+
+def _print_rows(df, args) -> None:
+    """Print diff rows (sign first), at most --limit of them, as JSONL
+    with --json, else as text."""
+    if args.limit:
+        df = df.limit(args.limit)
+    cols = df.columns[1:]  # first column is the sign
+    for row in df.toLocalIterator():
+        if args.json_output:
+            print(json.dumps({"sign": row[0], **{c: _jsonable(row[c]) for c in cols}}))
+        else:
+            print(f"{row[0]} {', '.join(repr(row[c]) for c in cols)}")
 
 
 def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = None) -> int:
-    from pyspark.sql import functions as F
-
     from data_diff_spark.diff import Algorithm, diff_tables
     from data_diff_spark.sources.connect import connect_to_table
 
@@ -300,15 +332,7 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
                 SN.write_snapshot(t1, args.snapshot_write)
                 print(f"snapshot written to {args.snapshot_write}", file=sys.stderr)
                 return 0
-            diff = SN.diff_against_snapshot(t1, SN.load_snapshot(spark, args.snapshot))
-            if args.limit:
-                diff = diff.limit(args.limit)
-            for row in diff.toLocalIterator():
-                if args.json_output:
-                    print(json.dumps({"sign": row[0],
-                                      **{c: _jsonable(row[c]) for c in diff.columns[1:]}}))
-                else:
-                    print(f"{row[0]} {', '.join(repr(row[c]) for c in diff.columns[1:])}")
+            _print_rows(SN.diff_against_snapshot(t1, SN.load_snapshot(spark, args.snapshot)), args)
             return 0
 
         if args.remote_digest:
@@ -344,20 +368,14 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
                     print(f"refined: table {side} column {col!r} detected as {kind}",
                           file=sys.stderr)
 
-        if args.update_column and (args.min_age or args.max_age):
-            upd = F.col(args.update_column)
-            for seg_attr, pred in (("min_age", upd < _age_bound(spark, args.min_age) if args.min_age else None),
-                                   ("max_age", upd > _age_bound(spark, args.max_age) if args.max_age else None)):
-                if pred is not None:
-                    t1 = t1.with_(df=t1.df.filter(pred))
-                    t2 = t2.with_(df=t2.df.filter(pred))
+        bounds = _age_bounds(spark, args)
+        t1, t2 = _age_filtered(t1, args, bounds), _age_filtered(t2, args, bounds)
 
         result = diff_tables(
             t1,
             t2,
             algorithm=Algorithm(args.algorithm),
             n_buckets=args.n_buckets,
-            hashdiff_persist=args.persist_strategy,
             # AUTO resolves to joindiff (diff.py), so the duplicate-key
             # guard the reference always runs for joindiff applies there too
             validate_unique_key=not args.assume_unique_key
@@ -395,16 +413,7 @@ def main(argv: Optional[Sequence[str]] = None, spark: Optional[SparkSession] = N
                 print(f"{k}: {v}")
             return 0
 
-        df = result.df
-        if args.limit:
-            df = df.limit(args.limit)
-        it = df.toLocalIterator()
-        cols = df.columns[1:]  # first column is the sign
-        for row in it:
-            if args.json_output:
-                print(json.dumps({"sign": row[0], **{c: _jsonable(row[c]) for c in cols}}))
-            else:
-                print(f"{row[0]} {', '.join(repr(row[c]) for c in cols)}")
+        _print_rows(result.df, args)
         return 0
     finally:
         if "result" in locals():
@@ -435,23 +444,6 @@ def _spark_type_to_sql(dt) -> str:
     }.get(type(dt), "VARCHAR")
 
 
-def _remote_age_bounds(spark, args) -> dict:
-    """min/max-age boundaries computed ONCE client-side, so both engines
-    compare against the SAME instant — two engine-local now() calls would
-    disagree by query latency and misalign the windows (the reference also
-    computes min_update/max_update client-side, table_segment.py)."""
-    out = {}
-    if args.update_column and (args.min_age or args.max_age):
-        from datetime import timedelta
-
-        now = spark.sql("select current_timestamp() as t").first()["t"]
-        if args.min_age:
-            out["lt"] = now - timedelta(seconds=parse_duration_seconds(args.min_age))
-        if args.max_age:
-            out["gt"] = now - timedelta(seconds=parse_duration_seconds(args.max_age))
-    return out
-
-
 def _remote_relation(rel: str, args, bounds: dict, dialect) -> str:
     """Wrap the remote relation in a subquery applying the SAME restriction
     the Spark side gets: --remote-where (or --where) verbatim, plus the
@@ -477,19 +469,12 @@ def _remote_digest_diff(spark, args, keys) -> int:
     """uri1 stays a Spark-side segment; uri2 becomes a RemoteSide that
     computes its own bucket digests (reference hashdiff deployment shape:
     only checksums + mismatched-bucket rows cross the wire)."""
-    from pyspark.sql import functions as F
-
     from data_diff_spark.operators import remote as RM
     from data_diff_spark.sources.connect import connect_to_table
 
     t1 = connect_to_table(spark, args.uri1, keys, args.update_column, None, args.where)
-    bounds = _remote_age_bounds(spark, args)
-    if bounds:  # batch mode applies this after its own branch; remote here
-        upd = F.col(args.update_column)
-        if "lt" in bounds:
-            t1 = t1.with_(df=t1.df.filter(upd < F.lit(bounds["lt"])))
-        if "gt" in bounds:
-            t1 = t1.with_(df=t1.df.filter(upd > F.lit(bounds["gt"])))
+    bounds = _age_bounds(spark, args)
+    t1 = _age_filtered(t1, args, bounds)
     uri = args.uri2
     if uri.startswith("duckdb://"):
         import duckdb
@@ -574,13 +559,7 @@ def _remote_digest_diff(spark, args, keys) -> int:
             print(f"-: {counts.get('-', 0)}")
             print(f"+: {counts.get('+', 0)}")
             return 0
-        df = diff.limit(args.limit) if args.limit else diff
-        cols = df.columns[1:]
-        for row in df.toLocalIterator():
-            if args.json_output:
-                print(json.dumps({"sign": row[0], **{c: _jsonable(row[c]) for c in cols}}))
-            else:
-                print(f"{row[0]} {', '.join(repr(row[c]) for c in cols)}")
+        _print_rows(diff, args)
         return 0
     finally:
         for cached in getattr(diff, "_ddspark_persisted", []):

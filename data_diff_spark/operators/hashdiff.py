@@ -28,7 +28,7 @@ PostgreSQL/DuckDB/Snowflake via the reference's segment SQL
 
 from __future__ import annotations
 
-from typing import List, NamedTuple, Optional, Tuple
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -87,9 +87,15 @@ def _side_sql(t: TableSegment, cols: List[str], out_names: List[str]) -> _SideSQ
 
 def _annotated_narrow(t: TableSegment, side: _SideSQL) -> DataFrame:
     """Normalized key strings + per-row checksum + key hash ONLY — no raw
-    columns. The persist="narrow" cache: a handful of strings and two
+    columns. This is what hash_diff caches: a handful of strings and two
     numbers per row no matter how wide the table, at the cost of a final
-    semi-join re-read of the emitted keys (see hash_diff)."""
+    semi-join re-read of the emitted keys (_narrow_emit). The hash covers
+    the *normalized key strings*, so both sides align even when key
+    columns differ in name or physical type (the reference aligns
+    segments by key value, diff_tables.py:377-391), and phase 2 groups on
+    the same strings. Bucket ids at any granularity derive from the
+    stored hash (pmod), so the digest levels are chosen after
+    annotation."""
     return t.make_select().selectExpr(
         f"{side.cks} AS {_CKS}", *side.knorm_exprs(), side.keyhash_expr()
     )
@@ -99,28 +105,11 @@ def _narrow_emit(
     t: TableSegment, out_names: List[str], sign: str, bad_keys: DataFrame, side: _SideSQL,
 ) -> DataFrame:
     """Re-read a side restricted (left-semi on normalized keys) to the PKs
-    the narrow phase decided differ; all rows of a differing PK come back,
-    preserving the duplicate-PK multiset emission of the wide path."""
+    phase 2 decided differ; all rows of a differing PK come back, which
+    is the duplicate-PK multiset emission."""
     annotated = t.make_select().selectExpr(*side.renamed, *side.knorm_exprs())
     joined = annotated.join(bad_keys, [_knorm(i) for i in range(len(side.knorm))], "left_semi")
     return joined.selectExpr(f"'{sign}' AS {SIGN_COL}", *map(q, out_names))
-
-
-def _annotated(t: TableSegment, side: _SideSQL) -> DataFrame:
-    """Rows + per-row checksum + normalized key strings + key hash, columns
-    renamed to the shared output names. The hash covers the *normalized key
-    strings* so both sides align even when key columns differ in name or
-    physical type (the reference aligns segments by key value,
-    diff_tables.py:377-391 — hashing canonical strings gives the same
-    alignment-by-construction). The normalized strings themselves are kept
-    as __knorm{i}__ columns: phase 2 partitions its multiset windows on
-    them, so the window grouping agrees with the digest hashing even under
-    kind overrides (uuid trim) or cross-side key type differences.
-    Bucket ids at any granularity derive from the stored hash (pmod), so
-    the digest levels are chosen AFTER annotation."""
-    return t.make_select().selectExpr(
-        *side.renamed, f"{side.cks} AS {_CKS}", *side.knorm_exprs(), side.keyhash_expr()
-    )
 
 
 def _bucket_of(n: int) -> str:
@@ -166,21 +155,32 @@ def _paired_digest(a: DataFrame, b: DataFrame, n_buckets: int):
     return da, db, rows_total
 
 
-def _restrict(df: DataFrame, ids: List, n: int) -> DataFrame:
+def _dirty_buckets(da: Dict, db: Dict) -> List:
+    """Bucket ids whose (count, checksum-sum) digest differs between two
+    {bucket: digest} maps, including buckets only one side has: the
+    driver-side compare (mismatched_buckets keeps the fine level's large
+    sets in the JVM)."""
+    return [k for k in set(da) | set(db) if da.get(k) != db.get(k)]
+
+
+def _restrict(df: DataFrame, ids: List, n: int, bucket: Optional[str] = None) -> DataFrame:
     """Restrict `df` to the buckets `ids` of an n-bucket level (bucket ids
-    are ints the digests produced; a full id set prunes nothing)."""
+    are ints the digests produced; a full id set prunes nothing). `bucket`
+    is the SQL of a row's bucket id: by default the key hash's at that
+    level, or a column that already holds it."""
+    bucket = bucket or _bucket_of(n)
     if len(ids) >= n:
         return df
     if not ids:
         return df.filter("false")  # folds to an empty relation
     if len(ids) <= _ISIN_LIMIT:
         # IN over a literal set compiles to a hash-set probe (InSet)
-        return df.filter(f"{_bucket_of(n)} IN ({', '.join(str(int(x)) for x in ids)})")
+        return df.filter(f"{bucket} IN ({', '.join(str(int(x)) for x in ids)})")
     bad_df = df.sparkSession.createDataFrame([(int(x),) for x in ids], f"{_BUCKET} long")
-    return _restrict_join(df, bad_df, n, broadcast=True)
+    return _restrict_join(df, bad_df, bucket, broadcast=True)
 
 
-def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
+def _restrict_join(df: DataFrame, ids_df: DataFrame, bucket: str,
                    broadcast: bool) -> DataFrame:
     """Restrict `df` to the buckets in `ids_df` (a single-`_BUCKET`-column
     frame that stays in the JVM) via left-semi join — the large-id-set
@@ -188,7 +188,9 @@ def _restrict_join(df: DataFrame, ids_df: DataFrame, n: int,
     id frame to every task (one long column; ~16 bytes/id); above
     _BROADCAST_KEYS_LIMIT the caller leaves the join shape to AQE."""
     rhs = F.broadcast(ids_df) if broadcast else ids_df
-    return (df.selectExpr("*", f"{_bucket_of(n)} AS {_BUCKET}")
+    if bucket == _BUCKET:
+        return df.join(rhs, _BUCKET, "left_semi")
+    return (df.selectExpr("*", f"{bucket} AS {_BUCKET}")
             .join(rhs, _BUCKET, "left_semi").drop(_BUCKET))
 
 
@@ -200,12 +202,44 @@ def mismatched_buckets(da: DataFrame, db: DataFrame) -> DataFrame:
     return j.filter("NOT (ca <=> cb) OR NOT (sa <=> sb)").select(_BUCKET)
 
 
+def _pk_rule(emit_equal_duplicates: bool = False,
+             window: Optional[str] = None) -> Tuple[List[str], str]:
+    """The diff_sets decision for one PK (hashdiff_tables.py:30-84) over a
+    union of both sides tagged with SIGN_COL ('-' = A, '+' = B) that
+    carries the row checksum _CKS: a PK differs iff its row multisets
+    differ, i.e. iff its per-side (count, checksum-sum) digests do.
+    emit_equal_duplicates also emits every PK with other than one row on
+    either side (the reference's artifact, see hash_diff).
+
+    Returns (digests, differs). Without `window` the four digests are
+    aggregates named __ca__/__cb__/__sa__/__sb__ for a groupBy on the
+    key, and `differs` tests those names. With `window` (the PARTITION BY
+    list of the key columns) they are window functions, inlined into
+    `differs` for a projection over the rows."""
+    is_a = f"cast(({SIGN_COL} = '-') as bigint)"
+    aggs = (
+        f"sum({is_a})",
+        f"sum(1 - {is_a})",
+        f"sum(CASE WHEN {SIGN_COL} = '-' THEN {_CKS} END)",
+        f"sum(CASE WHEN {SIGN_COL} = '+' THEN {_CKS} END)",
+    )
+    if window is None:
+        names = ("__ca__", "__cb__", "__sa__", "__sb__")
+        digests = [f"{e} AS {n}" for e, n in zip(aggs, names)]
+    else:
+        names = digests = [f"{e} OVER (PARTITION BY {window})" for e in aggs]
+    ca, cb, sa, sb = names
+    differs = f"(NOT ({ca} = {cb}) OR NOT ({sa} <=> {sb}))"
+    if emit_equal_duplicates:
+        differs = f"((NOT ({ca} = 1) OR NOT ({cb} = 1)) OR {differs})"
+    return digests, differs
+
+
 def hash_diff(
     t1: TableSegment,
     t2: TableSegment,
     n_buckets: Optional[int] = None,
     emit_equal_duplicates: bool = False,
-    persist: str = "narrow",
 ) -> DataFrame:
     """Diff DataFrame (sign, *columns-of-table-1's-names), duplicate-PK-aware.
 
@@ -218,35 +252,20 @@ def hash_diff(
     here, when its bucket digest mismatched. Like the reference, that output
     then depends on how the key space was segmented.
 
-    persist picks the cache strategy the digest levels + phase 2 read:
-      "narrow" (default) only (normalized keys, checksum, key hash) cached —
-               a few strings + two numbers per row no matter how wide the
-               table (at 100 TB the wide cache IS the table); the emitted
-               PKs are then re-read from the sources with a left-semi join,
-               so the sources are scanned twice but the second scan is
-               pruned to differing keys. Measured equal to wide at 6M rows,
-               and the only strategy whose cache footprint is independent of
-               row width — hence the default (VERDICT r3: a default that
-               caches full rows of both sides makes the cache the table).
-      "wide"   full rows + checksum + key hash cached — one
-               normalization+md5 scan total; opt in when the rows are
-               narrow or the diff rate is high enough that the pruned
-               second scan would re-read most of the table anyway.
+    Only (normalized keys, checksum, key hash) are cached — a few strings
+    + two numbers per row no matter how wide the table (a cache of full
+    rows would, at 100 TB, be the table) — and the emitted PKs are re-read
+    from the sources with a left-semi join, so the sources are scanned
+    twice but the second scan is pruned to differing keys.
     """
-    if persist not in ("wide", "narrow"):
-        raise ValueError(f"persist must be 'wide' or 'narrow', got {persist!r}")
     cols1, cols2 = _check_consistent(t1, t2)
     out_names = cols1
     keys = list(t1.key_columns)
     nkeys = len(keys)
 
     s1, s2 = _side_sql(t1, cols1, out_names), _side_sql(t2, cols2, out_names)
-    if persist == "narrow":
-        a = _annotated_narrow(t1, s1).persist()
-        b = _annotated_narrow(t2, s2).persist()
-    else:
-        a = _annotated(t1, s1).persist()
-        b = _annotated(t2, s2).persist()
+    a = _annotated_narrow(t1, s1).persist()
+    b = _annotated_narrow(t2, s2).persist()
 
     # --- level 1: coarse digests (DEFAULT_N_BUCKETS) ------------------------
     # The reference recursively bisects because remote round-trips dominate;
@@ -262,13 +281,13 @@ def hash_diff(
     # driver (ONE fused job for both sides, no digest join), which also
     # yields the exact row count for fine-level sizing for free.
     da, db, rows_total = _paired_digest(a, b, coarse_n)
-    bad_ids = [k for k in set(da) | set(db) if da.get(k) != db.get(k)]
+    bad_ids = _dirty_buckets(da, db)
 
     a_bad = _restrict(a, bad_ids, coarse_n)
     b_bad = _restrict(b, bad_ids, coarse_n)
 
     # --- level 2: fine digests over the dirty-coarse rows only --------------
-    # ...unless the dirty-coarse rows are ALREADY few: phase 2's windowed
+    # ...unless the dirty-coarse rows are ALREADY few: phase 2's per-key
     # multiset compare over <2M narrow rows costs less than another
     # digest round-trip (two aggregate jobs + two restriction scans), so
     # the fine level only pays for itself when it can prune a big set.
@@ -303,102 +322,61 @@ def hash_diff(
                 b_bad = _restrict(b_bad, fine_ids, fine_n)
             elif n_ids < fine_n:
                 bcast = n_ids <= _BROADCAST_KEYS_LIMIT
-                a_bad = _restrict_join(a_bad, ids_df, fine_n, bcast)
-                b_bad = _restrict_join(b_bad, ids_df, fine_n, bcast)
+                a_bad = _restrict_join(a_bad, ids_df, _bucket_of(fine_n), bcast)
+                b_bad = _restrict_join(b_bad, ids_df, _bucket_of(fine_n), bcast)
                 extra_handles.append(ids_df)
             else:
                 ids_df.unpersist()
 
     # Phase 2 — the diff_sets decision, one shuffle over the surviving
-    # NARROW rows: union both sides tagged with a sign, hash-partition by
-    # PK, and compare each PK's per-side (count, checksum-sum) multiset
-    # digest (hashdiff_tables.py:30-84 semantics). Grouping is on the
-    # NORMALIZED key strings carried from _annotated — the same canonical
-    # form the digests hash — not the raw renamed key values, whose
-    # types/trimming may differ across sides.
+    # narrow rows: union both sides tagged with a sign and compare each
+    # PK's per-side (count, checksum-sum) multiset digest (_pk_rule).
+    # Grouping is on the NORMALIZED key strings carried from
+    # _annotated_narrow — the same canonical form the digests hash — not
+    # the raw renamed key values, whose types/trimming may differ across
+    # sides. Only the KEY SET is consumed downstream, so the per-key
+    # digests come from one hash AGGREGATION (map-side partial agg, no
+    # sort): one Exchange of partial aggregates instead of a window's
+    # full-row exchange + sort (r13b: the window count job read 1.8-3.5s
+    # at sf0.1 for ~30k rows; at scale the partial agg shuffles per-key
+    # digests, never rows). Each side is then re-read pruned to those
+    # keys (all rows of a differing PK match the semi-join).
     u = a_bad.selectExpr("*", f"'-' AS {SIGN_COL}").unionAll(
         b_bad.selectExpr("*", f"'+' AS {SIGN_COL}")
     )
     knorm_names = [_knorm(i) for i in range(nkeys)]
-    # per-key (count, checksum-sum) of each side; `over` turns them into
-    # window aggregates for the wide path
-    is_a = f"cast(({SIGN_COL} = '-') as bigint)"
-    digests = (
-        f"sum({is_a})",
-        f"sum(1 - {is_a})",
-        f"sum(CASE WHEN {SIGN_COL} = '-' THEN {_CKS} END)",
-        f"sum(CASE WHEN {SIGN_COL} = '+' THEN {_CKS} END)",
-    )
-
-    def _pk_differs(ca, cb, sa, sb):
-        multiset = f"(NOT ({ca} = {cb}) OR NOT ({sa} <=> {sb}))"
-        if emit_equal_duplicates:
-            return f"((NOT ({ca} = 1) OR NOT ({cb} = 1)) OR {multiset})"
-        return multiset
-
-    if persist == "narrow":
-        # the narrow frames carry no raw columns: decide PKs here, then
-        # re-read each side pruned to those keys (all rows of a differing
-        # PK match the semi-join, preserving multiset emission). Only the
-        # KEY SET is consumed downstream, so the per-key digests come
-        # from one hash AGGREGATION (map-side partial agg, no sort)
-        # instead of the wide path's window-over-union + distinct — one
-        # Exchange of partial aggregates replaces the window's full-row
-        # exchange + sort + a second distinct exchange (r13b: the window
-        # count job read 1.8-3.5s at sf0.1 for ~30k rows; at scale the
-        # partial agg also shuffles per-key digests, never rows). The
-        # per-key decision expression is identical.
-        names = ("__ca__", "__cb__", "__sa__", "__sb__")
-        g = u.groupBy(*knorm_names).agg(
-            *[F.expr(f"{d} AS {n}") for d, n in zip(digests, names)]
+    digests, differs = _pk_rule(emit_equal_duplicates)
+    g = u.groupBy(*knorm_names).agg(*map(F.expr, digests))
+    bad = g.filter(differs).select(*knorm_names)
+    # The differing-key set is proportional to the DIFF count, not the
+    # table: broadcast it so the pruned re-read is scan+broadcast-semi,
+    # never a full shuffle of both sides (unbroadcast, the semi join
+    # sort-merge-shuffled 6M rows per side and ran 5x slower than a
+    # full-row cache at sf0.1). Above the cap, fall back to AQE's choice.
+    # dirty_rows (the coarse dirty-bucket rows of both sides, already
+    # on the driver) bounds the key set from above: at or below the
+    # cap the set is broadcast without a sizing action, and each emit
+    # leg evaluates it itself (an aggregation over the dirty rows
+    # only; measured flat against persisting it once at 50k rows /
+    # 0.02% changed and 200k rows / 5% changed, 9 jobs instead of 11).
+    # Above the cap, which includes every run that reaches the fine
+    # level, the bound says nothing: persist the set and count it.
+    if dirty_rows <= _BROADCAST_KEYS_LIMIT:
+        bad_keys = F.broadcast(bad)
+    else:
+        bad = bad.persist()
+        extra_handles.append(bad)
+        bad_keys = (
+            F.broadcast(bad)
+            if bad.count() <= _BROADCAST_KEYS_LIMIT
+            else bad
         )
-        bad = g.filter(_pk_differs(*names)).select(*knorm_names)
-        # The differing-key set is proportional to the DIFF count, not the
-        # table: broadcast it so the pruned re-read is scan+broadcast-semi,
-        # never a full shuffle of both sides (unbroadcast, the semi join
-        # sort-merge-shuffled 6M rows per side and narrow ran 5x slower
-        # than wide at sf0.1). Above the cap, fall back to AQE's choice.
-        # dirty_rows (the coarse dirty-bucket rows of both sides, already
-        # on the driver) bounds the key set from above: at or below the
-        # cap the set is broadcast without a sizing action, and each emit
-        # leg evaluates it itself (an aggregation over the dirty rows
-        # only; measured flat against persisting it once at 50k rows /
-        # 0.02% changed and 200k rows / 5% changed, 9 jobs instead of 11).
-        # Above the cap, which includes every run that reaches the fine
-        # level, the bound says nothing: persist the set and count it.
-        if dirty_rows <= _BROADCAST_KEYS_LIMIT:
-            bad_keys = F.broadcast(bad)
-        else:
-            bad = bad.persist()
-            extra_handles.append(bad)
-            bad_keys = (
-                F.broadcast(bad)
-                if bad.count() <= _BROADCAST_KEYS_LIMIT
-                else bad
-            )
-        out = _narrow_emit(t1, out_names, "-", bad_keys, s1).unionAll(
-            _narrow_emit(t2, out_names, "+", bad_keys, s2)
-        )
-        out._ddspark_persisted = [a, b, *extra_handles]
-        return out
-    # wide path: the full rows ride the frames, so emission is per ROW —
-    # the window form computes the per-key digests alongside each row in
-    # one pass (an aggregation would need a join back to the rows)
-    w = f" OVER (PARTITION BY {', '.join(knorm_names)})"
-    emit = _pk_differs(*[d + w for d in digests])
-    out = (
-        u.selectExpr("*", f"{emit} AS __emit__")
-        .filter("__emit__")
-        .selectExpr(SIGN_COL, *map(q, out_names))
+    out = _narrow_emit(t1, out_names, "-", bad_keys, s1).unionAll(
+        _narrow_emit(t2, out_names, "+", bad_keys, s2)
     )
     # Caller-managed cache lifecycle: the result is lazy, so the persisted
     # sides must outlive it. DiffResult.unpersist() (and the CLI) release
     # them once the diff is materialized; long-lived sessions doing many
-    # diffs would otherwise accumulate cached wide tables.
+    # diffs would otherwise accumulate cached tables.
     out._ddspark_persisted = [a, b, *extra_handles]
     return out
-
-
-def count_and_checksum(t: TableSegment) -> Tuple[int, Optional[int]]:
-    """Whole-table count + checksum (one pass); see TableSegment.count_and_checksum."""
-    return t.count_and_checksum()

@@ -58,18 +58,25 @@ from data_diff_spark.normalize import (
     null_safe_sql,
     quote_ident as q,
 )
+from data_diff_spark.operators.hashdiff import (
+    _AUTO_ROWS_PER_BUCKET,
+    _BUCKET,
+    _CKS,
+    _dirty_buckets,
+    _knorm,
+    _pk_rule,
+    _restrict,
+)
 from data_diff_spark.operators.joindiff import SIGN_COL
 from data_diff_spark.table import TableSegment
-
-# Cross-engine bucket id: low 8 hex digits of md5 of the normalized key
-# fingerprint, mod n_buckets. Computable in any engine with md5().
-_BUCKET = "__bucket__"
-_CKS = "__cks__"
 
 _DECIMAL_RE = re.compile(r"(?:DECIMAL|NUMERIC)\s*\(\s*\d+\s*,\s*(\d+)\s*\)")
 
 
 def _spark_bucket_sql(key_norm: Sequence[str], n_buckets: int) -> str:
+    """Cross-engine bucket id: the first 8 hex digits of md5 of the
+    normalized key fingerprint, mod n_buckets. Computable in any engine
+    with md5() (xxhash64, hashdiff's key hash, exists only in Spark)."""
     joined = f"concat_ws('|', {', '.join(null_safe_sql(k) for k in key_norm)})"
     return f"pmod(cast(conv(substring(md5({joined}), 1, 8), 16, 10) as bigint), {int(n_buckets)})"
 
@@ -999,7 +1006,7 @@ def hash_diff_remote(
     fetched from the remote and diffed against the Spark rows of those
     buckets with the multiset-per-PK semantics of hashdiff phase 2.
 
-    n_buckets=None (default) auto-sizes to ~TARGET_ROWS_PER_BUCKET rows per
+    n_buckets=None (default) auto-sizes to ~_AUTO_ROWS_PER_BUCKET rows per
     bucket from a Spark-side count (parquet metadata makes it near-free).
     Too few buckets is the classic trap: at a 0.4% diff rate and 1k rows per
     bucket, nearly EVERY bucket contains a diff and phase 2 degenerates into
@@ -1008,6 +1015,10 @@ def hash_diff_remote(
     (24 bytes each). If most buckets end up dirty anyway, the per-row bucket
     filter is dropped and the remote side streams the relation once without
     re-hashing every row against a giant IN list.
+
+    The dirty-bucket compare, the restriction to dirty buckets and the
+    per-key multiset rule are hash_diff's (_dirty_buckets, _restrict,
+    _pk_rule).
     """
     spark = t1.df.sparkSession
     cols = list(t1.relevant_columns)
@@ -1016,10 +1027,9 @@ def hash_diff_remote(
         raise ValueError(f"column arity mismatch: {cols} vs {remote.columns}")
 
     if n_buckets is None:
-        TARGET_ROWS_PER_BUCKET = 16
         cnt = t1.make_select().count()
         n_buckets = 1024
-        while n_buckets * TARGET_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
+        while n_buckets * _AUTO_ROWS_PER_BUCKET < cnt and n_buckets < (1 << 20):
             n_buckets <<= 1
 
     normd = normalized_sql(t1.schema, cols, t1.precision_overrides, t1.kind_overrides)
@@ -1051,11 +1061,7 @@ def hash_diff_remote(
     }
     remote_digests = {int(b): (int(c), int(s) if s is not None else None)
                       for b, c, s in remote.bucket_digests(n_buckets)}
-
-    bad = sorted(
-        b for b in set(local) | set(remote_digests)
-        if local.get(b) != remote_digests.get(b)
-    )
+    bad = sorted(_dirty_buckets(local, remote_digests))
 
     # Degenerate case: most buckets dirty -> a giant IN list makes the
     # remote re-hash every row just to keep rows it would keep anyway.
@@ -1063,14 +1069,13 @@ def hash_diff_remote(
     if len(bad) > max(1024, n_buckets // 4):
         fetch_ids = None
 
-    # Broadcast semi-join, not .isin(literal list): the dirty-bucket set is
-    # proportional to the diff count, and a million-literal IN expression
-    # melts the driver/codegen long before the executors see it.
-    bad_df = spark.createDataFrame([(int(b),) for b in bad], f"{_BUCKET} long")
-    a_bad = a.join(F.broadcast(bad_df), _BUCKET, "left_semi")
+    # The Spark rows of the dirty buckets, and the remote ones when the
+    # fetch was not restricted: an InSet probe on the bucket column up to
+    # hashdiff's _ISIN_LIMIT ids, a broadcast id frame above it.
+    a_bad = _restrict(a, bad, n_buckets, _BUCKET)
     b_df = remote.fetch_bucket_rows(spark, a.schema, n_buckets, fetch_ids)
     if fetch_ids is None:
-        b_df = b_df.join(F.broadcast(bad_df), _BUCKET, "left_semi")
+        b_df = _restrict(b_df, bad, n_buckets, _BUCKET)
 
     u = a_bad.selectExpr("*", f"'-' AS {SIGN_COL}").unionByName(
         b_df.selectExpr("*", f"'+' AS {SIGN_COL}")
@@ -1085,16 +1090,14 @@ def hash_diff_remote(
     # expression-valued partition specs don't collapse — Catalyst re-projects
     # the partition expression per aggregate and plans four Window nodes with
     # four identical shuffles. AttributeReference specs collapse to ONE.
-    knames = [f"__knorm{i}__" for i in range(len(keys))]
+    # The window form (not hash_diff's aggregate + semi-join re-read) is
+    # deliberate: b_df comes from a one-shot fetch, and re-reading a
+    # JdbcSide would run the remote query twice.
+    knames = [_knorm(i) for i in range(len(keys))]
     u = u.selectExpr(
         "*", *[f"{null_safe_sql(k)} AS {n}" for k, n in zip(key_norm, knames)]
     )
-    w = f"OVER (PARTITION BY {', '.join(knames)})"
-    is_a = f"cast(({SIGN_COL} = '-') as bigint)"
-    ca, cb = f"sum({is_a}) {w}", f"sum(1 - {is_a}) {w}"
-    sa = f"sum(CASE WHEN {SIGN_COL} = '-' THEN {_CKS} END) {w}"
-    sb = f"sum(CASE WHEN {SIGN_COL} = '+' THEN {_CKS} END) {w}"
-    differs = f"NOT ({ca} = {cb}) OR NOT ({sa} <=> {sb})"
+    _, differs = _pk_rule(window=", ".join(knames))
     out = (
         u.selectExpr("*", f"{differs} AS __emit__")
         .filter("__emit__")

@@ -2245,15 +2245,6 @@ def semdedup_incremental(
 # --- DuckDB oracle builders -------------------------------------------------
 
 
-def duckdb_prepared(table: str, dim: int = 64, id_col: str = "vec_id", vec_col: str = "embedding") -> str:
-    """CTE body computing (id, qv, nrm) identically to _prepared."""
-    return (
-        f"select {id_col} as id, "
-        f"list_transform({vec_col}, x -> round(x::double * {QUANT_SCALE})::bigint) as qv "
-        f"from {table}"
-    )
-
-
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",

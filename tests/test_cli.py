@@ -1,9 +1,13 @@
 """CLI tests — in-process (shared Spark session) against scratch parquet."""
 
+import datetime as dt
 import json
 import os
+import time
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from data_diff_spark.cli import expand_columns, main, parse_duration_seconds
@@ -71,6 +75,45 @@ def test_cli_jsonl_hashdiff(spark, sf_dir, mod_orders_path, capsys):
         signs[r["sign"]] = signs.get(r["sign"], 0) + 1
     n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
     assert signs == {"-": 2 * (n // 100), "+": n // 100}
+
+
+def test_cli_age_window_is_one_instant(spark, tmp_path, monkeypatch):
+    """--min-age resolves to ONE instant per run: the segments the CLI hands
+    to the diff count the same rows however much later they are read, so
+    the digest job, the re-read of the sources and the --stats counts all
+    see one window. One row crosses the boundary a few seconds after the
+    run starts; a filter on current_timestamp() counts it in the second
+    read only."""
+    from data_diff_spark import diff as D
+
+    t0 = dt.datetime.now(dt.timezone.utc)
+    cross = t0 + dt.timedelta(seconds=6)  # when the last row turns 1min old
+    old = dt.datetime(2000, 1, 1, tzinfo=dt.timezone.utc)
+    table = pa.table({
+        "id": pa.array([1, 2, 3, 4], pa.int64()),
+        "upd": pa.array([old, old, old, cross - dt.timedelta(minutes=1)],
+                        pa.timestamp("us", tz="UTC")),
+        "v": ["a", "b", "c", "d"],
+    })
+    path = str(tmp_path / "aged.parquet")
+    pq.write_table(table, path)
+
+    class Stop(Exception):
+        pass
+
+    seen = []
+
+    def record(t1, t2, **kw):
+        seen.extend([t1, t2])
+        raise Stop
+
+    monkeypatch.setattr(D, "diff_tables", record)
+    with pytest.raises(Stop):
+        main([f"parquet://{path}", f"parquet://{path}", "-k", "id", "-t", "upd",
+              "--min-age", "1min", "--no-refine"], spark=spark)
+    first = [t.df.count() for t in seen]
+    time.sleep(max(0.0, (cross - dt.datetime.now(dt.timezone.utc)).total_seconds() + 1))
+    assert [t.df.count() for t in seen] == first
 
 
 def test_diff_schemas():

@@ -215,27 +215,30 @@ def test_per_column_diff_counts(spark):
     assert row["exclusive_a"] == 0 and row["exclusive_b"] == 0
 
 
-def test_hashdiff_narrow_persist_equals_wide(spark, sf_dir):
-    """persist='narrow' (keys+checksums cached, emitted keys re-read via
-    semi-join) must emit the exact multiset the wide path emits — exercised
-    on the dup-key compound-key lineitem workload."""
-    from data_diff_spark.workload import _lineitem_segments
+def test_hashdiff_dupkeys_matches_oracle(spark, sf_dir):
+    """hash_diff on the dup-key compound-key lineitem pair emits exactly
+    the rows of the DuckDB digest oracle (every row of each PK whose row
+    multiset differs), both at a fixed bucket count and auto-sized."""
+    import duckdb
+
+    from data_diff_spark.workload import _hashdiff_lineitem_oracle, _lineitem_segments
 
     t1, t2 = _lineitem_segments(spark, sf_dir)
-    wide = hash_diff(t1, t2, n_buckets=256, persist="wide")
-    narrow = hash_diff(t1, t2, n_buckets=256, persist="narrow")
+    con = duckdb.connect()
+    con.execute(
+        f"create view lineitem as select * from read_parquet('{sf_dir}/lineitem.parquet')")
     key = lambda r: tuple(str(v) for v in r)
-    assert sorted(map(key, wide.collect())) == sorted(map(key, narrow.collect()))
-    with pytest.raises(ValueError, match="persist"):
-        hash_diff(t1, t2, persist="bogus")
-    # r13: the narrow path's phase-2 key decision is a hash AGGREGATION
-    # (map-side partial agg, no sort), never the wide path's
-    # window-over-union — pin the plan shape so it cannot silently
-    # regress to the window form
-    narrow_plan = narrow._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in narrow_plan
-    wide_plan = wide._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in wide_plan
+    want = sorted(map(key, con.execute(_hashdiff_lineitem_oracle()).fetchall()))
+    assert want
+    for n_buckets in (256, None):
+        d = hash_diff(t1, t2, n_buckets=n_buckets)
+        assert sorted(map(key, d.collect())) == want, n_buckets
+        # phase 2's key decision is a hash AGGREGATION (map-side partial
+        # agg, no sort), never a window over the union — pin the plan
+        # shape so it cannot silently regress to the window form
+        assert "Window" not in d._jdf.queryExecution().executedPlan().toString()
+        for h in d._ddspark_persisted:
+            h.unpersist()
 
 
 def test_stats_dict(spark):

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_diff_spark import table_segment
+from data_diff_spark.operators.hashdiff import hash_diff
 from data_diff_spark.operators.remote import (
     DuckDBDialect,
     DuckDBSide,
@@ -98,6 +99,53 @@ def _duck_reader(spark, con, captured):
         captured.append(sql)
         return spark.createDataFrame(con.execute(sql).fetch_df())
     return read
+
+
+def test_remote_duplicate_pk_semantics_match_hash_diff(spark):
+    """hash_diff_remote applies hash_diff's per-key multiset rule: on the
+    duplicate-PK fixture (FIXTURES F6) plus a PK whose duplicate rows are
+    equal on both sides, the remote diff equals hash_diff row for row —
+    also with one bucket, where the equal-duplicate PK reaches phase 2."""
+    a_rows = [(12, "ABCDE"), (12, "ABCDE"), (1, "x"), (1, "x")]
+    b_rows = [(4, "ABCDEF"), (4, "ABCDE"), (4, "ABCDE"),
+              (6, "ABCDE"), (6, "ABCDE"), (6, "ABCDE"), (1, "x"), (1, "x")]
+    schema = "id int, data string"
+    t1 = table_segment(spark.createDataFrame(a_rows, schema), ["id"])
+    t2 = table_segment(spark.createDataFrame(b_rows, schema), ["id"])
+    c = duckdb.connect()
+    c.execute("create table dup_b (id integer, data varchar)")
+    c.executemany("insert into dup_b values (?, ?)", b_rows)
+    remote = DuckDBSide("dup_b", ["id"], ["id", "data"], con=c)
+    want = sorted([("-", 12, "ABCDE")] * 2 + [("+", 4, "ABCDEF")] + [("+", 4, "ABCDE")] * 2
+                  + [("+", 6, "ABCDE")] * 3)
+    for n_buckets in (None, 1):
+        local = sorted(tuple(r) for r in hash_diff(t1, t2, n_buckets=n_buckets).collect())
+        got = sorted(tuple(r) for r in hash_diff_remote(t1, remote, n_buckets=n_buckets).collect())
+        assert got == local == want, n_buckets
+
+
+def test_remote_mostly_dirty_buckets(spark, monkeypatch):
+    """When most buckets are dirty the remote streams its whole relation
+    and both sides are restricted in Spark with hashdiff's _restrict: an
+    InSet probe on the bucket column, or above _ISIN_LIMIT ids a broadcast
+    id frame. Every key differs here, so ~1,550 of 2,048 buckets are dirty;
+    both branches must equal hash_diff."""
+    from data_diff_spark.operators import hashdiff as H
+
+    a = spark.range(0, 3000).selectExpr("id", "cast(id * 7 as string) as data")
+    b = spark.range(0, 3000).selectExpr("id", "cast(id * 7 + 1 as string) as data")
+    c = duckdb.connect()
+    c.execute("create table mostly_dirty as select i::BIGINT as id, "
+              "cast(i * 7 + 1 as varchar) as data from range(3000) t(i)")
+    remote = DuckDBSide("mostly_dirty", ["id"], ["id", "data"], con=c)
+    t1 = table_segment(a, ["id"])
+    want = sorted(tuple(r) for r in hash_diff(t1, table_segment(b, ["id"])).collect())
+    assert len(want) == 6000
+    for isin_limit in (8192, 1):
+        monkeypatch.setattr(H, "_ISIN_LIMIT", isin_limit)
+        got = hash_diff_remote(t1, remote, n_buckets=2048)
+        assert sorted(tuple(r) for r in got.collect()) == want, isin_limit
+        got._ddspark_persisted[0].unpersist()
 
 
 def test_jdbc_side_zero_diff_single_digest_query(spark, t1, con):
